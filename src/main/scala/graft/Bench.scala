@@ -4,7 +4,7 @@ import graft.operators.Routing
 import graft.source.wal.{WalFixture, WalLog}
 import graft.streaming.{MultiSlot, StreamingPipeline}
 import graft.streaming.MultiSlot.SlotSpec
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions.{col, concat, lit, max, min, pmod, when}
 import java.nio.file.{Files, Paths}
 
@@ -85,27 +85,8 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // Object-agg hash capacity (r19): the engine's typed-imperative
-      // aggregates (TopK heaps, MinOrd/MaxOrd) carry O(k)-bounded buffers
-      // (tens of bytes-to-~2 KB each), but Spark's default
-      // objectHashAggregate fallback threshold (128 in-memory keys) demotes
-      // them to sort-based on any high-cardinality group — re-introducing
-      // exactly the per-group sort the heap form exists to avoid. 64k keys
-      // x ~2 KB worst-case heap = ~128 MB per task upper bound, scale-
-      // independent (buffer size is bounded by k, not data); env-overridable
-      // for A/B (GRAFT_OBJ_AGG_FALLBACK).
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        sys.env.getOrElse("GRAFT_OBJ_AGG_FALLBACK", "65536"))
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val cpus = GraftSession.defaultCpus
+    val spark = GraftSession.getOrCreate()
 
     def runToNoop(df: DataFrame): Unit =
       df.write.format("noop").mode("overwrite").save()
@@ -2322,14 +2303,7 @@ object Bench {
     // GRAFT_BENCH_ONLY also filters the warm-up (iteration aid, r19): a
     // focused suite run should not pay a full 181-query warm-up pass. The
     // driver's full run leaves ONLY unset, so its warm-up is unchanged.
-    // GRAFT_BENCH_WARM_ALL=1 (r20, iteration aid): keep the FULL warm-up
-    // pass even under GRAFT_BENCH_ONLY — for A/B runs against pre-r19
-    // trees whose warm-up never filtered (JIT state must match or the
-    // focused comparison measures warm-up breadth, not the tree). The
-    // driver's full run leaves both unset: warm-up unchanged.
-    val onlyWarm =
-      if (sys.env.getOrElse("GRAFT_BENCH_WARM_ALL", "0") == "1") None
-      else sys.env.get("GRAFT_BENCH_ONLY").map(_.split(",").toSet)
+    val onlyWarm = sys.env.get("GRAFT_BENCH_ONLY").map(_.split(",").toSet)
     if (runSuite) SparkEntry.queries
       .filter { case (n, _) => onlyWarm.forall(_.contains(n)) }
       .foreach { case (_, fn) =>

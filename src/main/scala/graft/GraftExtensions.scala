@@ -9,10 +9,11 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   * available to ANY session (including pure-SQL users) via
   *
   * {{{
-  *   SparkSession.builder()
-  *     .withExtensions(new GraftExtensions)            // programmatic
+  *   builder.withExtensions(new GraftExtensions)   // a SparkSession.Builder
   *   // or: --conf spark.sql.extensions=graft.GraftExtensions
   * }}}
+  *
+  * [[GraftSession]] registers it on every engine session.
   *
   * This is the injection point for the whole custom ladder — functions now;
   * resolution rules / planner strategies use the same hook when an operator

@@ -2,7 +2,6 @@ package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
   SparkListenerStageSubmitted}
-import org.apache.spark.sql.SparkSession
 import java.util.concurrent.atomic.AtomicLong
 
 /** Optimization-round measurement tool (r20): count Spark JOBS and STAGES
@@ -17,18 +16,7 @@ object JobCount {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val onlySet = if (args.length > 1) Some(args(1).split(",").toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        sys.env.getOrElse("GRAFT_OBJ_AGG_FALLBACK", "65536"))
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.getOrCreate()
     val jobs = new AtomicLong; val stages = new AtomicLong
     spark.sparkContext.addSparkListener(new SparkListener {
       override def onJobStart(j: SparkListenerJobStart): Unit =

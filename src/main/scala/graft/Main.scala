@@ -39,22 +39,7 @@ object Main {
           "unset — refusing to start a pipeline that would ingest nothing")
     }
 
-    val spark = SparkSession.builder()
-      .appName("graft")
-      .master(sys.env.getOrElse("SPARK_MASTER",
-        s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]"))
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // bounded-buffer typed aggregates (TopK heaps, MinOrd) must stay
-      // hash-based past 128 groups — see Bench.scala's rationale (r19)
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        sys.env.getOrElse("GRAFT_OBJ_AGG_FALLBACK", "65536"))
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.getOrCreate()
 
     val metrics = new GraftMetrics
     spark.streams.addListener(new GraftQueryListener(metrics, config.streams))

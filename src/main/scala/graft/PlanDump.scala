@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths, StandardOpenOption}
 import java.nio.charset.StandardCharsets
 
@@ -16,18 +15,7 @@ object PlanDump {
     val outDir = args(1)
     val tag = args(2)
     val onlySet = if (args.length > 3) Some(args(3).split(",").toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        sys.env.getOrElse("GRAFT_OBJ_AGG_FALLBACK", "65536"))
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.getOrCreate()
     Files.createDirectories(Paths.get(outDir))
     val ordered = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => onlySet.forall(_.contains(n)) }

@@ -165,27 +165,8 @@ object ScaleSmoke {
     val copies = sys.env.getOrElse("GRAFT_SMOKE_COPIES", "10").toInt
     val out = args.headOption.getOrElse(
       s"${sys.props("java.io.tmpdir")}/graft_smoke_sf1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // Object-agg hash capacity (r19): the engine's typed-imperative
-      // aggregates (TopK heaps, MinOrd/MaxOrd) carry O(k)-bounded buffers
-      // (tens of bytes-to-~2 KB each), but Spark's default
-      // objectHashAggregate fallback threshold (128 in-memory keys) demotes
-      // them to sort-based on any high-cardinality group — re-introducing
-      // exactly the per-group sort the heap form exists to avoid. 64k keys
-      // x ~2 KB worst-case heap = ~128 MB per task upper bound, scale-
-      // independent (buffer size is bounded by k, not data); env-overridable
-      // for A/B (GRAFT_OBJ_AGG_FALLBACK).
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        sys.env.getOrElse("GRAFT_OBJ_AGG_FALLBACK", "65536"))
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val cpus = GraftSession.defaultCpus
+    val spark = GraftSession.getOrCreate()
     val jitter = sys.env.getOrElse("GRAFT_SMOKE_JITTER", "0") == "1"
     // completion marker, not a table probe: with GRAFT_SMOKE_TABLES the
     // replica set may not include lineitem, and a partial (crashed) build
@@ -372,8 +353,9 @@ object ScaleSmoke {
         if (c0 < 0) -1.0 else (cpuNanos() - c0) / 1e9, secs, gcMs() - g0))
       val big = try shape(out) catch { case _: Throwable => "n/a" }
       // the shape probes + timed run each registered this query's owned
-      // checkpoints (localCheckpoint is eager, so even plan-only probes
-      // materialize); consumed now — release before the next rung query
+      // checkpoints (lazy since r20, but the probes still register frames
+      // and run their exchange stages); consumed now — release before the
+      // next rung query
       graft.util.Checkpoints.releaseOwned(spark)
       val flip = if (small != big) "  PLAN-FLIP" else ""
       f"$name%-30s $secs%7.2fs  $r%s$flip%n    sf0.1: $small%n    sf~1 : $big"

@@ -20,36 +20,23 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     CdcQueries.cdcKafkaMessages._1(spark, "/root/testdata/sf0.001")
 
-  // Per-query objectHashAggregate fallback threshold (r20, r19 VERDICT
-  // "What's wrong" #2). The raised 64k bound's safety argument is
-  // per-task memory = threshold × per-group BUFFER BOUND, and it holds
-  // only for aggregates whose buffer is O(k)-bounded: the engine's
-  // TopKByScore heaps (≤ ~2 KB), MinOrd/MaxOrd (one value), the DCT
-  // fixed-64-coefficient lists, market-basket's order-size-bounded part
-  // sets. events_funnel_steps instead collect_lists ONE USER's stage-2/3
-  // event times — data-dependent per-group memory that 64k in-flight
-  // groups per task could multiply into the hundreds of MB at 100 TB —
-  // so that query runs at Spark's default 128 (its pre-r19 fallback,
-  // memory-governed). Applied by setting the session conf as the query
-  // is BUILT: the harnesses run queries sequentially and the exec reads
-  // the conf at action time, so the value set here governs the
-  // execution that follows; the next query sets its own. Perf-only
-  // either way (fallback switches operator strategy, never results).
-  // GRAFT_OBJ_AGG_FALLBACK still overrides both classes for A/B.
-  private val objAggKey =
-    "spark.sql.objectHashAggregate.sortBased.fallbackThreshold"
+  // Queries whose aggregate buffers grow with the data: they keep Spark's
+  // default object-agg threshold (see GraftSession's rationale).
   private val unboundedBufferQueries = Set("events_funnel_steps")
-  private def objAggThresholdFor(name: String): String =
-    sys.env.getOrElse("GRAFT_OBJ_AGG_FALLBACK",
-      if (unboundedBufferQueries(name)) "128" else "65536")
 
-  /** One entry per implemented operator from SURVEY.md §2. */
+  /** One entry per implemented operator from SURVEY.md §2. Each query is
+    * built in its own [[GraftSession.queryScope]] clone of the caller's
+    * session, holding that query's object-agg threshold, so the returned
+    * frame runs under its own conf whatever else is built or run before
+    * it is consumed. Owned checkpoints still key on the caller: release
+    * them with `Checkpoints.releaseOwned(caller)` once the output is
+    * consumed. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     modules.flatten.map { case (name, (fn, _)) =>
-      name -> ((s: SparkSession, dir: String) => {
-        s.conf.set(objAggKey, objAggThresholdFor(name))
-        fn(s, dir)
-      })
+      val threshold =
+        if (unboundedBufferQueries(name)) 128 else GraftSession.ObjAggThreshold
+      name -> ((s: SparkSession, dir: String) =>
+        fn(GraftSession.queryScope(s, threshold), dir))
     }.toMap
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on

@@ -4,7 +4,6 @@ import graft.operators.Routing
 import graft.source.wal.{WalFixture, WalLog}
 import graft.streaming.StreamingPipeline
 import graft.metrics.{GraftMetrics, GraftQueryListener}
-import org.apache.spark.sql.SparkSession
 import java.nio.file.Files
 
 /** Runnable end-to-end demo of the streaming CDC path: renders the events
@@ -14,14 +13,7 @@ import java.nio.file.Files
 object StreamDemo {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.getOrCreate()
 
     val walDir = Files.createTempDirectory("graft-demo-wal").toString
     val outDir = Files.createTempDirectory("graft-demo-out").toString

@@ -1,30 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // Object-agg hash capacity (r19): the engine's typed-imperative
-      // aggregates (TopK heaps, MinOrd/MaxOrd) carry O(k)-bounded buffers
-      // (tens of bytes-to-~2 KB each), but Spark's default
-      // objectHashAggregate fallback threshold (128 in-memory keys) demotes
-      // them to sort-based on any high-cardinality group — re-introducing
-      // exactly the per-group sort the heap form exists to avoid. 64k keys
-      // x ~2 KB worst-case heap = ~128 MB per task upper bound, scale-
-      // independent (buffer size is bounded by k, not data); env-overridable
-      // for A/B (GRAFT_OBJ_AGG_FALLBACK).
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        sys.env.getOrElse("GRAFT_OBJ_AGG_FALLBACK", "65536"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.getOrCreate()
     new java.io.File(outDir).mkdirs()
     // GRAFT_VERIFY_ONLY=name1,name2 restricts the dump (builder-side
     // iteration aid, e.g. re-checking one query at sf0.1); the driver's

@@ -156,8 +156,10 @@ object Components {
         .filter(col("l").isNull || col("r").isNull).count()
       // the convergence count was round R−1's last read — release it (the
       // final round's `small` stays: the label join below reads it).
-      // Round 1's count also materialized the initial lazy edge chain off
-      // p, so p's blocks become releasable exactly here.
+      // release(p) acts only under GRAFT_EAGER_CHECKPOINT=1, where p was
+      // finalized when it was built. Lazily, no action finalizes p (each
+      // count finalizes only its nearest marked frame), so the guard makes
+      // it a no-op and the harness's owned sweep frees p.
       graft.util.Checkpoints.release(edges)
       if (!pReleased) { graft.util.Checkpoints.release(p); pReleased = true }
       edges = small

@@ -1578,8 +1578,10 @@ object AnalyticsQueries {
         .groupBy(col("user_id"))
         .agg(sort_array(collect_set(col("day_us"))).as("days"))
       // try_element_at (1-based) instead of days[i+1]: under ANSI mode a
-      // bare out-of-bounds index on the last element would crash; NULL
-      // falls through the OR exactly as the absent-next-day case
+      // bare out-of-bounds index on the last element would crash. It
+      // cannot return NULL for i < size-1; the last day is marked churned
+      // by the explicit size check, not by NULL propagation (a NULL alone
+      // would make the CASE yield 0), so the size check must stay
       val flags = perUser.select(explode(expr(
           "transform(days, (d, i) -> struct(d AS day_us, " +
             "CASE WHEN i = size(days) - 1 " +

@@ -2481,7 +2481,7 @@ object ExtQueries {
       // r20 A/B, reverted: fanning this checkpoint to 32 partitions
       // (hypothesis: the broadcast-joined L2 legs inherit the single-task
       // scan layout) measured ~2x SLOWER across the whole sim tier
-      // (min-of-5, GRAFT_FANOUT on/off: recall 1.99->4.40, trained
+      // (min-of-5, fan-out on/off: recall 1.99->4.40, trained
       // 0.91->2.21, pq_train 0.99->1.74, rerank_trained 1.53->2.94) — the
       // added keyless repartition (with its sort-before-repartition pass
       // over 512 B array rows) plus 32x the per-stage task count through
@@ -3977,8 +3977,9 @@ object ExtQueries {
     * frame. [[simKnnGraph]] itself stays on the raw build path — the
     * bench keeps pricing the build honestly while the tier reuses it.
     *
-    * Lifecycle (r10 VERDICT #3): keyed by the session's UUID — a String —
-    * so the cache never pins a [[SparkSession]] (the previous WeakHashMap's
+    * Lifecycle (r10 VERDICT #3): keyed by the owning session's identity
+    * (`GraftSession.owner`: a query scope's caller) — a String — so the
+    * cache never pins a [[SparkSession]] (the previous WeakHashMap's
     * DataFrame values strongly reached their own weak key, making entries
     * uncollectable and the checkpoint blocks a JVM-lifetime leak). Hosts
     * running many sessions release a retiring session's blocks with
@@ -3995,7 +3996,9 @@ object ExtQueries {
   private[graft] val knnEdgeCache =
     new java.util.concurrent.ConcurrentHashMap[String, DataFrame]
 
-  private def sessionKey(s: SparkSession): String = ColumnBridge.sessionUuid(s)
+  // the caller's identity for a query-scope clone: every graph query a
+  // harness session runs shares one edge build
+  private def sessionKey(s: SparkSession): String = graft.GraftSession.owner(s)
 
   private def embFingerprint(dir: String): String = {
     val root = java.nio.file.Paths.get(dir, "embeddings.parquet")
@@ -4048,8 +4051,10 @@ object ExtQueries {
     val key = sessionKey(s) + "|" + dir + "|" +
       sys.props.getOrElse("graft.knn.block", "") + "|" +
       sys.props.getOrElse("graft.knn.cell", "") + "|" + embFingerprint(dir)
-    knnEdgeCache.computeIfAbsent(key,
-      _ => simKnnGraph._1(s, dir).localCheckpoint())
+    // rebound to `s`: the entry belongs to whichever session built it, and
+    // a frame derived from it would otherwise run under that session's conf
+    ColumnBridge.rebind(s, knnEdgeCache.computeIfAbsent(key,
+      _ => simKnnGraph._1(s, dir).localCheckpoint()))
   }
 
   // Semantic dedup clusters (SemDeDup shape): k-NN edges above a cosine

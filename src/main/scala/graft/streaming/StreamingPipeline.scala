@@ -38,11 +38,10 @@ object StreamingPipeline {
       .load()
 
   /** Routed, serialized, Kafka-shaped frame (topic, key, value) from the
-    * envelope stream. Serialize-once happens upstream of the broadcast
-    * fan-out join; the key is extracted from the JSON payload by the
+    * envelope stream. Serialize-once happens upstream of the routing
+    * fan-out; the key is extracted from the JSON payload by the
     * stream's routing_key. */
   def kafkaFrame(events: DataFrame, streams: Seq[StreamDef]): DataFrame = {
-    val spark = events.sparkSession
     // one envelope formatter for the whole engine (JsonEnvelope owns the
     // field order and escaping rules; the stream's `source` is the constant
     // the envelope hardcodes)
@@ -50,13 +49,9 @@ object StreamingPipeline {
       graft.serialization.JsonEnvelope.envelopeCol(
         op = col("op"), dataJson = col("data"), resource = col("resource"),
         timestamp = col("commit_ts"), lsn = col("lsn")))
-    // GRAFT_ROUTE_FORM=join selects the broadcast-join routing form for an
-    // A/B (RoutingInlineSpec pins row-identity between the two); inline is
-    // the default — zero exchanges, no per-batch broadcast build
-    val routed =
-      if (sys.env.getOrElse("GRAFT_ROUTE_FORM", "inline") == "join")
-        Routing.route(serialized, Routing.streamsDF(spark, streams))
-      else Routing.routeInline(serialized, streams)
+    // inline routing: zero exchanges, no per-batch broadcast build
+    // (RoutingInlineSpec pins row-identity with the broadcast-join form)
+    val routed = Routing.routeInline(serialized, streams)
     // Routing-key extraction from the JSON row payload. The key set is
     // closed (it comes from config), so this folds into a CASE over constant
     // JSON paths — codegen-friendly, unlike a dynamic path. A missing key

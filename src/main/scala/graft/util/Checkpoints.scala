@@ -1,5 +1,6 @@
 package graft.util
 
+import graft.GraftSession
 import org.apache.spark.sql.DataFrame
 
 /** Lifecycle helper for `localCheckpoint()`-materialized frames.
@@ -77,19 +78,18 @@ object Checkpoints {
   // every invocation pinned another frame's blocks for the session
   // lifetime (Bench invokes each query 4×, ScaleSmoke 3× per rung). The
   // registry closes the class: `owned` checkpoints AND records the frame
-  // under the owning session's UUID; the HARNESS (Bench / Verify /
-  // ScaleSmoke — whoever consumed the query's output) calls
-  // `releaseOwned` once the output is materialized, returning block-
-  // manager state to baseline. Correctness needs nothing from this: an
+  // under the owning session's identity (GraftSession.owner); the
+  // HARNESS (Bench / Verify / ScaleSmoke — whoever consumed the query's
+  // output) calls `releaseOwned` once the output is materialized,
+  // returning block-manager state to baseline. A query built in a
+  // GraftSession.queryScope clone registers under its caller, so the
+  // caller's sweep frees it. Correctness needs nothing from this: an
   // unreleased frame is only memory, and a released one is never re-read
   // because release happens strictly after consumption.
   // ------------------------------------------------------------------
 
   private val owned = new java.util.concurrent.ConcurrentHashMap[
     String, java.util.concurrent.ConcurrentLinkedQueue[DataFrame]]
-
-  private def uuid(s: org.apache.spark.sql.SparkSession): String =
-    org.apache.spark.sql.graft.ColumnBridge.sessionUuid(s)
 
   /** LAZY by default since r20: the eager form's materialization ran one
     * extra job per call site (and wrote the final stage's rows to the
@@ -131,7 +131,7 @@ object Checkpoints {
   }
 
   private def register(c: DataFrame): Unit = {
-    val id = uuid(c.sparkSession)
+    val id = GraftSession.owner(c.sparkSession)
     var registered = false
     while (!registered) {
       val q = owned.computeIfAbsent(id,
@@ -144,7 +144,7 @@ object Checkpoints {
 
   /** Frames currently registered for `s` (the lifecycle-spec gate). */
   def ownedCount(s: org.apache.spark.sql.SparkSession): Int = {
-    val q = owned.get(uuid(s)); if (q == null) 0 else q.size
+    val q = owned.get(GraftSession.owner(s)); if (q == null) 0 else q.size
   }
 
   /** Registered frames for `s` — spec introspection only (the lifecycle
@@ -153,7 +153,7 @@ object Checkpoints {
     * parallel suites). */
   private[graft] def ownedFrames(
       s: org.apache.spark.sql.SparkSession): Seq[DataFrame] = {
-    val q = owned.get(uuid(s))
+    val q = owned.get(GraftSession.owner(s))
     if (q == null) Seq.empty
     else {
       import scala.jdk.CollectionConverters._
@@ -172,7 +172,7 @@ object Checkpoints {
       val head = e.getValue.peek()
       if (head != null && head.sparkSession.sparkContext.isStopped) it.remove()
     }
-    val q = owned.remove(uuid(s))
+    val q = owned.remove(GraftSession.owner(s))
     if (q == null) 0
     else {
       var n = 0

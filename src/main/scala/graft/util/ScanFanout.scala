@@ -29,8 +29,6 @@ object ScanFanout {
   /** `ds` repartitioned to the session's shuffle parallelism when its
     * estimated input is below one scan split; `ds` unchanged otherwise. */
   def fan[T](ds: Dataset[T]): Dataset[T] = {
-    // GRAFT_FANOUT=0 disables (measurement A/B aid; production leaves it on)
-    if (sys.env.getOrElse("GRAFT_FANOUT", "1") == "0") return ds
     val conf = ds.sparkSession.sessionState.conf
     val target = conf.numShufflePartitions
     if (target <= 1) return ds
@@ -55,7 +53,6 @@ object ScanFanout {
     * For per-row kernels with no downstream key, use [[fan]]. */
   def fanBy[T](ds: Dataset[T],
       cols: org.apache.spark.sql.Column*): Dataset[T] = {
-    if (sys.env.getOrElse("GRAFT_FANOUT", "1") == "0") return ds
     val conf = ds.sparkSession.sessionState.conf
     val target = conf.numShufflePartitions
     if (target <= 1) return ds

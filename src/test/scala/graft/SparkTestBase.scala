@@ -3,20 +3,10 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** One shared session for all suites — creating one SparkSession per suite
-  * dominates test wall-clock otherwise. */
+  * dominates test wall-clock otherwise. The engine's own session settings,
+  * at a fixed 4 cpus so results do not depend on the host. */
 object SparkTestBase {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = GraftSession.getOrCreate(cpus = 4)
   val sf = "/root/testdata/sf0.001"
 
   // Stale test-fixture sweeper: specs create graft-* temp dirs (WAL

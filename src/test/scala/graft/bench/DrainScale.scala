@@ -2,18 +2,18 @@ package graft
 import graft.operators.Routing
 import graft.source.wal.{WalFixture, WalLog}
 import graft.streaming.StreamingPipeline
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
-/** Sustained-drain scale check: replay the sf0.1 events 10x (1M events,
-  * shifted LSNs/ids) and measure steady drain in 5k-frame micro-batches vs
-  * one big batch. */
+/** Sustained-drain scale check: replay the sf0.1 events N times (default
+  * 10: 1M events, shifted LSNs/ids) and time the drain at a given
+  * micro-batch size (default 100k frames).
+  *
+  * {{{
+  *   Test/runMain graft.DrainScale [copies] [maxEventsPerBatch]
+  * }}}
+  */
 object DrainScale {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.getOrCreate()
     val rows = WalFixture.eventsUs(spark, "/root/testdata/sf0.1")
       .orderBy("event_id").collect()
     val walDir = Files.createTempDirectory("scale-wal").toString
