@@ -23,11 +23,12 @@ import scala.jdk.CollectionConverters._
   *  - `brokerless = true` — Metadata reports an empty broker list
   *    (testConnection must fail).
   *
-  * Lives in main (not test) because `graft.Bench`'s `wal_drain_wire` point
-  * drains the headline backlog through it — the PgServerHarness precedent.
-  * `retain = false` (bench mode) skips queueing full record strings and
-  * keeps only the delivered (topic, lsn) set, so a ~1M-record drain does
-  * not hold every payload in broker memory.
+  * Lives in main (not test) because the benchmark's broker
+  * (`perfbench`'s `Broker`) builds against the main classes only, and
+  * the CDC workloads produce into this broker as the engine's Kafka.
+  * `retain = false` skips queueing full record strings and keeps only the
+  * delivered (topic, lsn) set, so a ~1M-record drain does not hold every
+  * payload in broker memory.
   */
 final class FakeKafkaBroker(topics: Map[String, Int],
     retain: Boolean = true,

@@ -6,8 +6,8 @@ import org.apache.spark.sql.graft.ColumnBridge
 /** The engine's one `SparkSession` builder, and the per-query session scope.
   *
   * Every main and the test base build their session through [[getOrCreate]],
-  * so the oracle gate (Verify), the bench, the pipeline (Main) and the tests
-  * plan under the same conf:
+  * so the oracle gate (Verify), the pipeline (Main), the tools and the
+  * tests plan under the same conf:
   *
   *  - master `SPARK_MASTER`, else `local[cpus]`, where cpus is
   *    `SPARK_GRAFT_CPUS`, else the JVM's available processors;

@@ -7,7 +7,7 @@ import java.util.concurrent.atomic.AtomicLong
 /** Optimization-round measurement tool (r20): count Spark JOBS and STAGES
   * per declared query — the driver-side scheduling constant the r19
   * verdict flagged. Not part of the driver contract; pairs with PlanDump
-  * the way `.explain` pairs with the bench (evidence, not timing).
+  * the way `.explain` pairs with the benchmark (evidence, not timing).
   *
   * Usage: runMain graft.JobCount <sfDir> [q1,q2,...]
   * Env:   GRAFT_EAGER_CHECKPOINT=1 for the before/after comparison.

@@ -117,8 +117,7 @@ object KafkaSasl {
 
   // ------------------------------------------------------------------
   // Server half — the scripted broker's verifier (test infrastructure
-  // living in main for the same reason FakeKafkaBroker does: the bench's
-  // wire points run against it).
+  // living in main because FakeKafkaBroker, which takes it, lives there).
 
   /** Broker-side credential set: principal → password, plus the offered
     * mechanism list. */

@@ -8,8 +8,9 @@ import scala.sys.process._
   * runtime. The reference keeps the same capability in its load stand
   * (`tests/load/` — a real server, a set-based SQL load generator, and the
   * client drained against it); here the harness is in-process so `sbt test`
-  * and `graft.Bench` can run the live tier wherever postgres binaries
-  * happen to exist, and skip cleanly where they don't.
+  * and the benchmark's `pg_live` workload (`perfbench`, which builds
+  * against the main classes only) can run against a real server wherever
+  * postgres binaries happen to exist, and skip cleanly where they don't.
   *
   * Root note: postgres refuses to run as root, so when the JVM is root the
   * server commands run through `su postgres|nobody`; otherwise directly.
@@ -50,10 +51,10 @@ final class PgServerHarness private (
     * verify the on-disk footprint is actually released. */
   def instanceDir: Path = baseDir
 
-  /** The postmaster's PID (first line of `data/postmaster.pid`) — the
-    * bench samples the server process tree's CPU around each live trial
-    * so a drift in the ~90%-read-wait drain points is attributable to
-    * client, server, or box from the artifact alone. */
+  /** The postmaster's PID (first line of `data/postmaster.pid`) — lets a
+    * host sample the server process tree's CPU around a live drain, so a
+    * drift in the ~90%-read-wait drain points is attributable to client,
+    * server, or box. */
   def serverPid: Option[Long] =
     try Some(Files.readAllLines(
       baseDir.resolve("data").resolve("postmaster.pid")).get(0).trim.toLong)
@@ -188,11 +189,10 @@ object PgServerHarness {
       s"-p $port",
       s"-c listen_addresses=$host",
       "-c wal_level=logical",
-      // a full bench run creates slots it never drops (the headline slot
-      // plus 2+4+8 shard slots = 15, plus the split-cluster rung's 4 on
-      // cluster A = 19) and the 8db rung runs 8 concurrent walsenders —
-      // 24 leaves headroom for a retried open racing a not-yet-released
-      // sender
+      // the live test tier shares one server across its specs, each
+      // creating its own slot (about a dozen, not all dropped), and a
+      // parallel snapshot opens one walsender per partition — 24 leaves
+      // headroom for a retried open racing a not-yet-released sender
       "-c max_wal_senders=24",
       "-c max_replication_slots=24",
       // Throwaway-server durability/WAL tuning. Beyond speed, this makes the

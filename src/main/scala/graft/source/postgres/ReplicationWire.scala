@@ -167,13 +167,9 @@ final class ReplicationSpooler(
     * walEnd for WAL it has not decoded/sent yet (WalSndWaitForWal reports
     * the position it is WAITING for), so this is a liveness/positioning
     * signal, not a delivery guarantee — a drain loop that needs "all data
-    * through LSN X arrived" must gate on [[dataFrames]]/[[insertFrames]]
-    * counts (or on spooled content), never on this alone. */
+    * through LSN X arrived" must gate on spooled content, never on this
+    * alone. */
   @volatile var lastReceivedLsn: Long = 0L
-  /** XLogData frames appended (all pgoutput messages). */
-  @volatile var dataFrames: Long = 0L
-  /** Insert ('I') frames appended — the count bench drains gate on. */
-  @volatile var insertFrames: Long = 0L
 
   private def nextSegmentIndex(): Int =
     WalLog.segmentFiles(walDir).lastOption
@@ -232,8 +228,6 @@ final class ReplicationSpooler(
       decode(msg) match {
         case Data(x) =>
           append(x.walStart, x.payload)
-          dataFrames += 1
-          if (x.payload.nonEmpty && x.payload(0) == 'I') insertFrames += 1
           lastReceivedLsn = math.max(lastReceivedLsn, x.walStart)
         case Ping(k) =>
           lastReceivedLsn = math.max(lastReceivedLsn, k.walEnd)

@@ -76,11 +76,12 @@ object Checkpoints {
   // plan that READS the checkpoint, so the query legitimately cannot
   // release it in-query — but nothing else ever released it either, so
   // every invocation pinned another frame's blocks for the session
-  // lifetime (Bench invokes each query 4×, ScaleSmoke 3× per rung). The
-  // registry closes the class: `owned` checkpoints AND records the frame
-  // under the owning session's identity (GraftSession.owner); the
-  // HARNESS (Bench / Verify / ScaleSmoke — whoever consumed the query's
-  // output) calls `releaseOwned` once the output is materialized,
+  // lifetime (ScaleSmoke invokes each query 3× per rung, the benchmark
+  // suite twice). The registry closes the class: `owned` checkpoints AND
+  // records the frame under the owning session's identity
+  // (GraftSession.owner); the HARNESS (Verify / ScaleSmoke / JobCount /
+  // PlanDump / perfbench's Suite — whoever consumed the query's output)
+  // calls `releaseOwned` once the output is materialized,
   // returning block-manager state to baseline. A query built in a
   // GraftSession.queryScope clone registers under its caller, so the
   // caller's sweep frees it. Correctness needs nothing from this: an

@@ -28,8 +28,8 @@ class HarnessLifecycleSpec extends AnyFunSuite {
     val s = h.session()
     try assert(s.simpleQuery("SELECT 1 AS one").single("one").contains("1"))
     finally s.close()
-    // r15: the bench samples the postmaster process tree's CPU around
-    // every live trial (srv_cpu_s) — the PID it samples must be real
+    // hosts sample the postmaster process tree's CPU around a live drain
+    // through serverPid — the PID it returns must be real
     val pid = h.serverPid
     assert(pid.nonEmpty, "serverPid unreadable while the server is up")
     assert(java.nio.file.Files.exists(

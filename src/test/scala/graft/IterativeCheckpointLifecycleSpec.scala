@@ -77,12 +77,13 @@ class IterativeCheckpointLifecycleSpec extends AnyFunSuite {
   test("query-owned checkpoints (mm_sim_dct et al) release to baseline via the registry") {
     // r12 VERDICT #6 / ADVICE: a one-shot query that checkpoints a frame
     // its returned plan reads (mm_sim_dct's descriptor frame) can't
-    // release it in-query, and nothing else ever did — Bench invokes each
-    // query 4× and ScaleSmoke 3× per rung, so superseded frames pinned
-    // blocks for the session lifetime. The registry closes the class: the
-    // harness calls releaseOwned after consuming each query's output.
+    // release it in-query, and nothing else ever did — a harness invokes
+    // each query several times (ScaleSmoke 3× per rung), so superseded
+    // frames pinned blocks for the session lifetime. The registry closes
+    // the class: the harness calls releaseOwned after consuming each
+    // query's output.
     val s = spark.newSession()
-    // two invocations back-to-back — the Bench shape that leaked
+    // two invocations back-to-back — the repeated-invocation shape that leaked
     (1 to 2).foreach { pass =>
       val out = SparkEntry.queries("mm_sim_dct")(s, SparkTestBase.sf)
       val n = out.count()

@@ -12,12 +12,29 @@ import java.nio.file.Files
 class MultiSlotSpec extends AnyFunSuite {
   private lazy val spark = SparkTestBase.spark
 
-  private def renderSlot(dir: String, ids: Range, types: Seq[String]): Long = {
+  private def renderSlot(dir: String, ids: Range,
+      types: Seq[String]): Seq[WalFixture.Ev] = {
     val evs = ids.map(i => WalFixture.Ev(i.toLong,
       1700000000000000L + i * 1000000L, i % 5,
       types(i % types.size), i * 0.5, "{}"))
     WalFixture.writeLog(evs.iterator, dir, segmentSize = 64)
-    evs.map(_.eventId * 10 + 13).max // last COMMIT lsn of the backlog
+    evs
+  }
+
+  private def lastCommitLsn(evs: Seq[WalFixture.Ev]): Long =
+    evs.map(_.eventId * 10 + 13).max
+
+  /** Distinct (topic, lsn) pairs a complete drain of `evs` must deliver,
+    * derived from the generator: one routed frame per (event × matching
+    * stream), through the pipeline's own routing join over the ops
+    * `WalFixture` renders. LSNs are unique per event and each fixture
+    * stream owns its topic, so the routed row count is the distinct count. */
+  private def expectedFrames(evs: Seq[WalFixture.Ev]): Long = {
+    import spark.implicits._
+    Routing.route(
+      evs.map(e => (s"public.${e.eventType}", WalFixture.opFor(e.eventId)))
+        .toDF("resource", "op"),
+      Routing.streamsDF(spark, Routing.fixtureStreams)).count()
   }
 
   test("two slots drain concurrently with isolated confirmed LSNs and sinks") {
@@ -27,8 +44,9 @@ class MultiSlotSpec extends AnyFunSuite {
     val ckpt = Files.createTempDirectory("graft-slots-ckpt").toString
 
     // disjoint resources per slot so cross-talk would be visible in a sink
-    val lastA = renderSlot(walA, 1 to 150, Seq("click", "purchase"))
-    val lastB = renderSlot(walB, 1 to 90, Seq("signup", "view"))
+    val evsA = renderSlot(walA, 1 to 150, Seq("click", "purchase"))
+    val evsB = renderSlot(walB, 1 to 90, Seq("signup", "view"))
+    val (lastA, lastB) = (lastCommitLsn(evsA), lastCommitLsn(evsB))
 
     val handles = MultiSlot.start(spark,
       Seq(SlotSpec("slot_a", walA), SlotSpec("slot_b", walB)),
@@ -55,6 +73,17 @@ class MultiSlotSpec extends AnyFunSuite {
       assert(a.count() > 0 && b.count() > 0)
       assert(a.filter(col("resource").isin("public.signup", "public.view")).count() == 0)
       assert(b.filter(col("resource").isin("public.click", "public.purchase")).count() == 0)
+
+      // fixture-truth delivered set: every frame each slot's generator
+      // implies arrived under that slot, so a slot that drops frames fails
+      Seq("slot_a" -> evsA, "slot_b" -> evsB).foreach { case (name, evs) =>
+        val delivered = spark.read.parquet(s"$out/slot=$name")
+          .select("topic", "lsn").distinct().count()
+        val expected = expectedFrames(evs)
+        assert(delivered == expected,
+          s"$name delivered $delivered distinct (topic, lsn), fixture " +
+            s"expects $expected")
+      }
 
       // the union view is free: slot is a Hive-style partition column
       val union = spark.read.parquet(out)

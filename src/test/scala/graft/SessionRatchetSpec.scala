@@ -5,9 +5,11 @@ import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 
 /** Ratchets over the main sources: one place builds a `SparkSession`
-  * (`GraftSession`), and the set of `GRAFT_*` environment knobs is the
-  * inventory below. A second builder or a new knob fails here; a deleted
-  * knob must leave the inventory too.
+  * (`GraftSession`), the set of `GRAFT_*` environment knobs is the
+  * inventory below, and the shipped entry points are the mains listed
+  * below. A second builder, a new knob or a new main fails here; a deleted
+  * knob or main must leave its list too. Timing harnesses belong in
+  * `perfbench/`, not in the shipped tree.
   */
 class SessionRatchetSpec extends AnyFunSuite {
   private val mainRoot = Paths.get("src/main")
@@ -24,22 +26,15 @@ class SessionRatchetSpec extends AnyFunSuite {
   }
 
   private val knobs = Set(
-    "GRAFT_BENCH_10X", "GRAFT_BENCH_10X_WARMUP", "GRAFT_BENCH_ANN",
-    "GRAFT_BENCH_ANN_INGEST", "GRAFT_BENCH_ANN_SWEEP",
-    "GRAFT_BENCH_CONTAM_LOAD_BAR", "GRAFT_BENCH_DRAIN", "GRAFT_BENCH_FLOOR",
-    "GRAFT_BENCH_FLOOR_DEBUG", "GRAFT_BENCH_FLOOR_PASSES",
-    "GRAFT_BENCH_FLOOR_WIRE", "GRAFT_BENCH_HD_WARMUP", "GRAFT_BENCH_LIVE",
-    "GRAFT_BENCH_LIVE_10X", "GRAFT_BENCH_LIVE_2DB", "GRAFT_BENCH_LIVE_2X4",
-    "GRAFT_BENCH_LIVE_4DB", "GRAFT_BENCH_LIVE_8DB", "GRAFT_BENCH_LOAD_THRESH",
-    "GRAFT_BENCH_LOAD_WAIT_S", "GRAFT_BENCH_ONLY", "GRAFT_BENCH_OUT",
-    "GRAFT_BENCH_PASSES", "GRAFT_BENCH_SCALE", "GRAFT_BENCH_SINK",
-    "GRAFT_BENCH_SLICE", "GRAFT_BENCH_SUITE", "GRAFT_BENCH_WIRE",
     "GRAFT_DRAIN_AND_EXIT", "GRAFT_DRAIN_GRACE_MS", "GRAFT_EAGER_CHECKPOINT",
     "GRAFT_HTTP_PORT", "GRAFT_KAFKA_BOOTSTRAP", "GRAFT_KNN_BLOCK",
     "GRAFT_KNN_CELL", "GRAFT_PLAN_EXEC", "GRAFT_SMOKE_APPEND",
     "GRAFT_SMOKE_COPIES", "GRAFT_SMOKE_EMB_JITTER", "GRAFT_SMOKE_JITTER",
     "GRAFT_SMOKE_LOAD_BAR", "GRAFT_SMOKE_ONLY", "GRAFT_SMOKE_SRC",
     "GRAFT_SMOKE_TABLES", "GRAFT_TRIGGER_MS", "GRAFT_VERIFY_ONLY")
+
+  private val mains =
+    Set("Main", "Verify", "ScaleSmoke", "JobCount", "PlanDump", "StreamDemo")
 
   test("SparkSession.builder() appears only in GraftSession") {
     assert(sources.nonEmpty, s"no sources under ${mainRoot.toAbsolutePath}")
@@ -57,5 +52,21 @@ class SessionRatchetSpec extends AnyFunSuite {
     }.toSet
     assert(read -- knobs == Set.empty, "knobs missing from the inventory")
     assert(knobs -- read == Set.empty, "inventory knobs no longer read")
+  }
+
+  test("the objects defining a main are the shipped entry points") {
+    // each `def main(` (or `extends App`) belongs to the nearest object
+    // declared before it in the same file
+    val objectDecl = "\\bobject\\s+([A-Za-z_][A-Za-z0-9_]*)".r
+    val entry = "\\bdef\\s+main\\s*\\(|\\bextends\\s+App\\b".r
+    val found = sources.flatMap { case (_, code) =>
+      val objects = objectDecl.findAllMatchIn(code)
+        .map(m => m.start -> m.group(1)).toSeq
+      entry.findAllMatchIn(code).map { m =>
+        objects.filter(_._1 < m.start).lastOption.map(_._2).getOrElse("?")
+      }
+    }.toSet
+    assert(found == mains,
+      s"mains under src/main: extra ${found -- mains}, missing ${mains -- found}")
   }
 }

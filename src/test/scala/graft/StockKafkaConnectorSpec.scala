@@ -6,7 +6,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * `format("kafka")` connector line has never executed because this
   * container ships no kafka jars (the produce path itself — wire format
   * v2, CRC32C, murmur2 partitioning, delivery barrier — runs e2e against
-  * the scripted broker in KafkaWireSpec and is a recorded bench point).
+  * the scripted broker in KafkaWireSpec and in the benchmark's CDC
+  * workloads).
   *
   * This spec makes the gap close WITHOUT a round of work the moment the
   * environment provides the pieces: it runs the real stock writer iff
