@@ -14,7 +14,7 @@ import scala.jdk.CollectionConverters._
   * Metadata v0, Produce v3 with message-format-v2 RecordBatches (CRC32C
   * verified on every ingested batch — a corrupt frame fails the test, not
   * just the request). Concurrent connections each get a handler thread, so
-  * `foreachPartition` tasks can produce in parallel.
+  * per-partition producer tasks can produce in parallel.
   *
   * Scripting:
   *  - `pushProduceErrors(code, n)` — the next n Produce requests fail with

@@ -72,8 +72,28 @@ object ChangeEvent {
 
   /** Render a WAL position as pg_lsn text `X/X` (upper-case hex hi/lo words),
     * e.g. 0x1_3259A308 → "1/3259A308" (reference: converter.zig:99-100). */
-  def lsnText(lsn: Long): String =
-    f"${(lsn >>> 32).toHexString.toUpperCase}%s/${(lsn & 0xFFFFFFFFL).toHexString.toUpperCase}%s"
+  def lsnText(lsn: Long): String = {
+    val out = new Array[Char](17)
+    var n = putHex(out, 0, lsn >>> 32)
+    out(n) = '/'
+    n = putHex(out, n + 1, lsn & 0xFFFFFFFFL)
+    new String(out, 0, n)
+  }
+
+  /** Write `w` as upper-case hex without leading zeros at `out(at)`;
+    * returns the index after the last digit. */
+  private def putHex(out: Array[Char], at: Int, w: Long): Int = {
+    var n = at
+    var shift = math.max(0, 63 - java.lang.Long.numberOfLeadingZeros(w)) / 4 * 4
+    while (shift >= 0) {
+      out(n) = UpperHex(((w >>> shift) & 0xF).toInt)
+      n += 1
+      shift -= 4
+    }
+    n
+  }
+
+  private val UpperHex = "0123456789ABCDEF".toCharArray
 
   /** Parse pg_lsn text back to a 64-bit position. */
   def lsnValue(text: String): Long = {

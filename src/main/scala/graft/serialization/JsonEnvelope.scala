@@ -25,14 +25,32 @@ import org.apache.spark.sql.functions._
   *     exercises.
   */
 object JsonEnvelope {
+  private val Hex = java.util.HexFormat.of()
 
   /** RFC 8259 string escaping incl. all control chars (reference json.zig:379-424). */
-  def escape(s: String): String = {
-    val sb = new StringBuilder(s.length + 8)
+  def escape(s: String): String =
+    if (cleanUpTo(s) == s.length) s
+    else {
+      val sb = new java.lang.StringBuilder(s.length + 8)
+      appendEscaped(sb, s)
+      sb.toString
+    }
+
+  /** Index of the first char of `s` that needs escaping, or `s.length`. */
+  private def cleanUpTo(s: String): Int = {
     var i = 0
+    while (i < s.length && { val c = s.charAt(i); c >= ' ' && c != '"' && c != '\\' })
+      i += 1
+    i
+  }
+
+  /** Append `s` escaped (no surrounding quotes): the clean prefix in one
+    * bulk copy, then char by char. */
+  private def appendEscaped(sb: java.lang.StringBuilder, s: String): Unit = {
+    var i = cleanUpTo(s)
+    if (i == s.length) sb.append(s) else sb.append(s, 0, i)
     while (i < s.length) {
-      val c = s.charAt(i)
-      c match {
+      s.charAt(i) match {
         case '"'  => sb.append("\\\"")
         case '\\' => sb.append("\\\\")
         case '\b' => sb.append("\\b")
@@ -40,12 +58,11 @@ object JsonEnvelope {
         case '\n' => sb.append("\\n")
         case '\r' => sb.append("\\r")
         case '\t' => sb.append("\\t")
-        case c if c < ' ' => sb.append(f"\\u${c.toInt}%04x")
+        case c if c < ' ' => sb.append("\\u").append(Hex.toHexDigits(c))
         case c => sb.append(c)
       }
       i += 1
     }
-    sb.toString
   }
 
   /** One JSON scalar per the reference's value rules: Long/Boolean native,
@@ -53,24 +70,49 @@ object JsonEnvelope {
     * non-finite a hard serialize error upstream; the converter's string
     * fallback at converter.zig:175-181 means they arrive here as String),
     * String escaped+quoted, null literal. */
-  def scalar(v: Any): String = v match {
-    case null => "null"
-    case l: Long => l.toString
-    case i: Int => i.toString
-    case b: Boolean => b.toString
+  def scalar(v: Any): String = {
+    val sb = new java.lang.StringBuilder(16)
+    appendScalar(sb, v)
+    sb.toString
+  }
+
+  /** [[scalar]], appended to `sb`. */
+  private def appendScalar(sb: java.lang.StringBuilder, v: Any): Unit = v match {
+    case null => sb.append("null")
+    case l: Long => sb.append(l)
+    case i: Int => sb.append(i)
+    case b: Boolean => sb.append(b)
     case d: Double =>
       require(!d.isNaN && !d.isInfinite,
         "non-finite float must be string-promoted by the converter")
-      d.toString
-    case s: String => "\"" + escape(s) + "\""
-    case other => "\"" + escape(other.toString) + "\""
+      sb.append(d)
+    case s: String => appendQuoted(sb, s)
+    case other => appendQuoted(sb, other.toString)
+  }
+
+  private def appendQuoted(sb: java.lang.StringBuilder, s: String): Unit = {
+    sb.append('"'); appendEscaped(sb, s); sb.append('"')
+  }
+
+  /** `"name":value` — one member of a row object, appended to `sb`; the
+    * caller writes the braces and the separating commas. */
+  def appendField(sb: java.lang.StringBuilder, name: String, v: Any): Unit = {
+    appendQuoted(sb, name); sb.append(':'); appendScalar(sb, v)
   }
 
   /** JSON object from ordered (name, value) pairs — field order preserved
     * (a row is an ORDERED list of named fields, change_event.zig:41-47). */
-  def obj(fields: Seq[(String, Any)]): String =
-    fields.map { case (k, v) => "\"" + escape(k) + "\":" + scalar(v) }
-      .mkString("{", ",", "}")
+  def obj(fields: Seq[(String, Any)]): String = {
+    val sb = new java.lang.StringBuilder(16 * fields.size + 2)
+    sb.append('{')
+    var first = true
+    fields.foreach { case (k, v) =>
+      if (!first) sb.append(',')
+      appendField(sb, k, v)
+      first = false
+    }
+    sb.append('}').toString
+  }
 
   /** Full envelope text for one event. `dataJson` is the already-serialized
     * row object (serialize-once, fan-out-many — processor.zig:204-206). */

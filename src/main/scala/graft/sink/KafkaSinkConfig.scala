@@ -221,8 +221,11 @@ object KafkaSinkConfig {
   * slot-resend behavior, src/sink/kafka/producer.zig:430-502); consumers
   * dedup on meta.lsn. */
 trait FrameProducer {
-  /** `shaped` carries (topic, key, value, …) rows, key-partitioned and
-    * LSN-ordered within partitions. */
+  /** `shaped` carries string (topic, key, value, …) columns. From
+    * [[graft.streaming.StreamingPipeline.start]] its rows are key-partitioned
+    * and LSN-ordered within partitions when `sinkParallelism > 1` or
+    * `sliceEvents > 0`; otherwise they are the micro-batch's one partition
+    * in WAL order. */
   def produce(shaped: org.apache.spark.sql.DataFrame): Unit
 }
 

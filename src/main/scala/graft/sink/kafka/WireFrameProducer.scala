@@ -1,6 +1,10 @@
 package graft.sink.kafka
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.TaskContext
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.types.{StringType, StructType}
+import org.apache.spark.unsafe.types.UTF8String
 
 /** [[graft.sink.FrameProducer]] over the in-repo wire client: each Spark
   * partition task opens its own connection (at scale, one producer socket
@@ -14,6 +18,10 @@ import org.apache.spark.sql.{DataFrame, Row}
   * (reference: src/sink/kafka/producer.zig:430-502) running against a real
   * socket instead of a seam.
   *
+  * `produce` runs the frame's already-planned rows (`toRdd`) in one job:
+  * no second query plan, no nested SQL execution, no `Row` decode. Inside a
+  * micro-batch that job belongs to the batch's own SQL execution.
+  *
   * Select the wire path with a `wire://host:port` bootstrap string.
   */
 final class WireFrameProducer(host: String, port: Int,
@@ -22,20 +30,17 @@ final class WireFrameProducer(host: String, port: Int,
     extends graft.sink.FrameProducer with Serializable {
 
   override def produce(shaped: DataFrame): Unit = {
-    val (h, p, t, sa) = (host, port, tls, sasl)
-    shaped.selectExpr("topic", "CAST(key AS STRING) AS key",
-        "CAST(value AS STRING) AS value")
-      .foreachPartition { rows: Iterator[Row] =>
-        val prod = new WireProducer(h, p, tls = t, sasl = sa)
-        try {
-          rows.foreach { r =>
-            val key = if (r.isNullAt(1)) null
-              else r.getString(1).getBytes("UTF-8")
-            prod.send(r.getString(0), key, r.getString(2).getBytes("UTF-8"))
-          }
-          prod.flush() // delivery barrier — clean return = all acked
-        } finally prod.close()
-      }
+    // checked before toRdd: planning an exchange already runs jobs
+    val send = new WireFrameProducer.SendPartition(host, port, tls, sasl,
+      WireFrameProducer.ordinal(shaped.schema, "topic"),
+      WireFrameProducer.ordinal(shaped.schema, "key"),
+      WireFrameProducer.ordinal(shaped.schema, "value"))
+    val rows = shaped.queryExecution.toRdd
+    // the (TaskContext, Iterator) form with a named function: Spark's
+    // closure cleaner skips it, where foreachPartition wraps and cleans
+    // two lambdas per call
+    shaped.sparkSession.sparkContext.runJob(rows, send,
+      0 until rows.getNumPartitions, WireFrameProducer.ignoreResult)
   }
 }
 
@@ -53,4 +58,41 @@ object WireFrameProducer {
       // validators exist to prevent
       Some(new WireFrameProducer(ep.host, ep.port, ep.tls, ep.sasl))
     } else None
+
+  /** Position of string column `name` in a frame to produce. */
+  private def ordinal(schema: StructType, name: String): Int = {
+    val i = schema.fieldNames.indexOf(name)
+    require(i >= 0, s"frame to produce has no '$name' column: ${schema.simpleString}")
+    require(schema(i).dataType.isInstanceOf[StringType],
+      s"frame column '$name' must be a string, got ${schema(i).dataType.simpleString}")
+    i
+  }
+
+  private val ignoreResult: (Int, Unit) => Unit = (_, _) => ()
+
+  /** One task: send every row of the partition, then flush — the task
+    * succeeds only once the broker acked all of them. A null key is sent
+    * as a null Kafka key. */
+  private final class SendPartition(host: String, port: Int,
+      tls: Option[graft.source.postgres.PgTls.SslConfig],
+      sasl: Option[KafkaSasl.Config], topic: Int, key: Int, value: Int)
+      extends ((TaskContext, Iterator[InternalRow]) => Unit) with Serializable {
+    override def apply(ctx: TaskContext, rows: Iterator[InternalRow]): Unit = {
+      val prod = new WireProducer(host, port, tls = tls, sasl = sasl)
+      // a partition holds a handful of topics: decode each run's name once
+      var topicBytes: UTF8String = null
+      var topicName: String = null
+      try {
+        while (rows.hasNext) {
+          val r = rows.next()
+          val t = r.getUTF8String(topic)
+          if (t != topicBytes) { topicBytes = t.clone(); topicName = t.toString }
+          prod.send(topicName,
+            if (r.isNullAt(key)) null else r.getUTF8String(key).getBytes,
+            r.getUTF8String(value).getBytes)
+        }
+        prod.flush() // delivery barrier — clean return = all acked
+      } finally prod.close()
+    }
+  }
 }

@@ -42,7 +42,7 @@ object Converter {
   def promote(oid: Int, d: Datum): Any = d match {
     case NullDatum => null
     case ToastDatum => ChangeEvent.ToastPlaceholder
-    case BinaryDatum(b) => b.map("%02X".format(_)).mkString
+    case BinaryDatum(b) => UpperHex.formatHex(b)
     case TextDatum(s) => oid match {
       case Oid.Int2 | Oid.Int4 | Oid.Int8 =>
         try java.lang.Long.parseLong(s) catch { case _: NumberFormatException => s }
@@ -56,6 +56,9 @@ object Converter {
       case _ => s
     }
   }
+
+  /** Upper-case hex, two digits per byte. */
+  private val UpperHex = java.util.HexFormat.of().withUpperCase()
 }
 
 final class Converter(registry: RelationRegistry) {
@@ -63,14 +66,25 @@ final class Converter(registry: RelationRegistry) {
 
   private var currentCommitTsS: Long = 0L
 
+  /** The row object in one pass: each `"name":value` member is appended
+    * straight to one builder. */
   private def rowJson(rel: RelationRegistry#RelationInfo, t: TupleData): String = {
-    if (t.columns.size != rel.columns.size)
+    val cols = rel.columns
+    val data = t.columns
+    if (data.size != cols.size)
       throw new ConvertException(
-        s"arity mismatch for ${rel.resource}: tuple has ${t.columns.size} " +
-          s"columns, relation has ${rel.columns.size}")
-    JsonEnvelope.obj(rel.columns.zip(t.columns).map { case (c, d) =>
-      c.name -> promote(c.typeOid, d)
-    })
+        s"arity mismatch for ${rel.resource}: tuple has ${data.size} " +
+          s"columns, relation has ${cols.size}")
+    val sb = new java.lang.StringBuilder(24 * cols.size + 2)
+    sb.append('{')
+    var i = 0
+    while (i < cols.size) {
+      if (i > 0) sb.append(',')
+      val c = cols(i)
+      JsonEnvelope.appendField(sb, c.name, promote(c.typeOid, data(i)))
+      i += 1
+    }
+    sb.append('}').toString
   }
 
   private def event(op: String, relId: Int, data: TupleData, lsn: Long): ChangeEvent = {

@@ -19,8 +19,9 @@ final class RelationRegistry {
   final case class RelationInfo(
       relationId: Int, namespace: String, name: String,
       replicaIdentity: Byte, columns: Vector[ColumnDef]) {
-    /** Schema-qualified identity — `schema.table` (converter.zig:92-94). */
-    def resource: String = s"$namespace.$name"
+    /** Schema-qualified identity — `schema.table` (converter.zig:92-94);
+      * built once per RELATION message, read for every event. */
+    val resource: String = s"$namespace.$name"
     /** REPLICA IDENTITY FULL ('f') ships full old rows on UPDATE/DELETE. */
     def hasFullIdentity: Boolean = replicaIdentity == 'f'.toByte
   }

@@ -387,6 +387,8 @@ final class PgWalPartitionReader(path: String, afterLsn: Long, untilLsn: Long,
     case _ => WalLog.readForBatch(path, afterLsn, untilLsn)
   }
   private var current: InternalRow = _
+  // every event's meta.source is the constant ChangeEvent.SourceName
+  private val source = UTF8String.fromString(graft.model.ChangeEvent.SourceName)
 
   override def next(): Boolean = {
     current = null
@@ -403,7 +405,7 @@ final class PgWalPartitionReader(path: String, afterLsn: Long, untilLsn: Long,
           current = InternalRow(
             UTF8String.fromString(e.op),
             UTF8String.fromString(e.data),
-            UTF8String.fromString(e.meta.source),
+            source,
             UTF8String.fromString(e.meta.resource),
             e.meta.timestamp,
             UTF8String.fromString(e.meta.lsn),

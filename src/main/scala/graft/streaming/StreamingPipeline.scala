@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.config.StreamDef
+import graft.functions.RowJsonKey
 import graft.operators.Routing
 import graft.source.wal.PgWalSource
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -39,8 +40,8 @@ object StreamingPipeline {
 
   /** Routed, serialized, Kafka-shaped frame (topic, key, value) from the
     * envelope stream. Serialize-once happens upstream of the routing
-    * fan-out; the key is extracted from the JSON payload by the
-    * stream's routing_key. */
+    * fan-out; the key is the row's top-level field named by the stream's
+    * routing_key. */
   def kafkaFrame(events: DataFrame, streams: Seq[StreamDef]): DataFrame = {
     // one envelope formatter for the whole engine (JsonEnvelope owns the
     // field order and escaping rules; the stream's `source` is the constant
@@ -52,18 +53,13 @@ object StreamingPipeline {
     // inline routing: zero exchanges, no per-batch broadcast build
     // (RoutingInlineSpec pins row-identity with the broadcast-join form)
     val routed = Routing.routeInline(serialized, streams)
-    // Routing-key extraction from the JSON row payload. The key set is
-    // closed (it comes from config), so this folds into a CASE over constant
-    // JSON paths — codegen-friendly, unlike a dynamic path. A missing key
-    // becomes an empty Kafka key (the strict variant raises,
-    // PartitionKey.requireKey).
-    val keyNames = streams.map(_.routingKey).distinct
-    val keyCol = keyNames.foldLeft(lit(null).cast("string")) { (acc, k) =>
-      when(col("routing_key") === k, get_json_object(col("data"), s"$$.$k"))
-        .otherwise(acc)
-    }
+    // Routing-key extraction from the JSON row payload: each row's match
+    // carries its stream's routing_key, read straight from the row's UTF-8
+    // bytes (RowJsonKey). A missing key becomes an empty Kafka key (the
+    // strict variant raises, PartitionKey.requireKey).
     routed
-      .withColumn("key", coalesce(keyCol, lit("")))
+      .withColumn("key",
+        coalesce(RowJsonKey(col("data"), col("routing_key")), lit("")))
       .select("topic", "key", "value", "stream", "lsn", "lsn_num", "op",
         "resource", "commit_ts")
   }
@@ -186,14 +182,17 @@ object StreamingPipeline {
           .option("path", outDir)
           .option("compression", "none")
     }
-    // The ~220 ms per-batch floor is dominated by the synchronous offset-log
-    // + commit-log writes, not the data path. Async progress tracking moves
-    // both off the critical path; Spark 4.1 name-allowlists only its own
-    // at-least-once sinks (Kafka/noop/memory/console) and rejects
-    // ForeachBatchSink outright, so the DSv2 frames sink opts in through
-    // Spark's documented override option — sound here because the engine's
-    // contract is already at-least-once with consumer dedup on meta.lsn
-    // (async only widens the post-crash redelivery window).
+    // A large share of the ~220 ms per-batch floor is the synchronous
+    // offset-log + commit-log writes. Inside each write the time goes to
+    // forked helper processes, not to the bytes: without libhadoop, Hadoop's
+    // local filesystem runs 2 `chmod` and 8 `readlink` per HDFSMetadataLog
+    // write, ~25 ms of wall time (a fork-free write takes ~2 ms). Async
+    // progress tracking moves both writes off the critical path; Spark 4.1
+    // name-allowlists only its own at-least-once sinks (Kafka/noop/memory/
+    // console) and rejects ForeachBatchSink outright, so the DSv2 frames
+    // sink opts in through Spark's documented override option — sound here
+    // because the engine's contract is already at-least-once with consumer
+    // dedup on meta.lsn (async only widens the post-crash redelivery window).
     val withAsync =
       if (asyncProgress)
         writer.option(graft.sink.frames.FramesSink.AsyncEnabled, "true")
