@@ -1,6 +1,7 @@
 package graft.config
 
 import graft.model.Op
+import java.util.Locale
 
 /** Stream definitions — the engine's "query language".
   *
@@ -23,7 +24,7 @@ final case class StreamDef(
 
   def normalized: StreamDef = {
     val res = if (resource.contains(".")) resource else s"public.$resource"
-    copy(resource = res, operations = operations.map(_.toLowerCase))
+    copy(resource = res, operations = operations.map(_.toLowerCase(Locale.ROOT)))
   }
 
   /** Operation-set predicates gating validation & snapshot
@@ -76,7 +77,7 @@ final case class EngineConfig(
         errs += s"invalid stream name: '${s.name}'"
       if (s.resource.isEmpty) errs += s"stream ${s.name}: empty resource"
       if (s.operations.isEmpty) errs += s"stream ${s.name}: no operations"
-      s.operations.filterNot(o => Op.configurable(o.toLowerCase))
+      s.operations.filterNot(o => Op.configurable(o.toLowerCase(Locale.ROOT)))
         .foreach(o => errs += s"stream ${s.name}: unknown operation '$o'")
       if (s.routingKey.isEmpty) errs += s"stream ${s.name}: empty routing_key"
     }

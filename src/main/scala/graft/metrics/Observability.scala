@@ -122,15 +122,15 @@ final class GraftMetrics(nowS: () => Long = () => System.currentTimeMillis() / 1
 }
 
 /** Bridges `observe("graft", count(...) AS events, max(commit_ts) AS
-  * max_commit_ts, tally_0..tally_k)` rows into [[GraftMetrics]]. Pass the
-  * same `streams` the pipeline was started with so the positional `tally_i`
-  * columns map back to their (stream, op) pairs — the tally is computed
-  * inside the streaming plan (conditional sums riding the observation), so
-  * metrics cost zero extra jobs per micro-batch. */
+  * max_commit_ts, stream_tally(stream, op) AS tallies)` rows into
+  * [[GraftMetrics]]. Pass the same `streams` the pipeline was started with:
+  * slot i of the `tallies` array counts the i-th pair of
+  * [[graft.functions.StreamTable.tallyPairs]]. The tally is computed inside
+  * the streaming plan (one aggregate riding the observation), so metrics
+  * cost zero extra jobs per micro-batch. */
 final class GraftQueryListener(metrics: GraftMetrics,
     streams: Seq[graft.config.StreamDef] = Nil) extends StreamingQueryListener {
-  private val tallyPairs =
-    graft.streaming.StreamingPipeline.tallyPairs(streams)
+  private val tallyPairs = new graft.functions.StreamTable(streams).tallyPairs
   override def onQueryStarted(event: QueryStartedEvent): Unit = {
     // a (re)started query is a recovery attempt: clear the sticky fatal
     // error so /readyz reflects the CURRENT run, not a past crash
@@ -145,12 +145,8 @@ final class GraftQueryListener(metrics: GraftMetrics,
       val events = if (row.isNullAt(0)) 0L else row.getLong(0)
       val maxTs = if (row.isNullAt(1)) None else Some(row.getLong(1))
       metrics.recordBatch(events, maxTs)
-      tallyPairs.zipWithIndex.foreach { case ((stream, op), i) =>
-        val idx = i + 2 // after events, max_commit_ts
-        if (idx < row.length && !row.isNullAt(idx)) {
-          val n = row.getLong(idx)
-          if (n > 0) metrics.tally(stream, op, n)
-        }
+      tallyPairs.iterator.zip(row.getSeq[Long](2)).foreach { case ((stream, op), n) =>
+        if (n > 0) metrics.tally(stream, op, n)
       }
     } else metrics.heartbeat()
   }

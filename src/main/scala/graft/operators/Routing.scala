@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.config.StreamDef
+import graft.functions.StreamTable
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -13,13 +14,18 @@ import org.apache.spark.sql.functions._
   * src/processor/routing_integration_test.zig:45-165). One event may route to
   * N sinks; READ events route only to read-opted streams (:170-211).
   *
-  * Spark-native shape: the stream config is a tiny dimension table — one row
-  * per (stream, operation) — and routing is a BROADCAST inner join on
-  * (resource, lower(op)). At 100 TB this is the right plan: the fact side
-  * streams through map tasks with zero shuffle; fan-out multiplicity falls out
-  * of the join. The alternative (N filtered branches) re-reads the source N
-  * times; the join form scans once — the "serialize once, fan out many"
-  * optimization (processor.zig:204-206) then applies upstream of this join.
+  * Spark-native shape: the stream config is a tiny dimension, one row per
+  * (stream, operation). Two forms route over it, with the same rows out:
+  *  - [[routeInline]], what the engine and the cdc queries run: the config
+  *    built once into a [[StreamTable]], one lookup per event and an
+  *    `explode` of its matches. Zero exchanges, one codegen stage, no
+  *    per-batch broadcast build and no one-time warm-up on the first batch.
+  *  - [[route]], the reference form the specs compare against: a BROADCAST
+  *    inner join on (resource, lower(op)); fan-out multiplicity falls out of
+  *    the join.
+  * Either way the source is scanned once, never once per stream — the
+  * "serialize once, fan out many" optimization (processor.zig:204-206)
+  * then applies upstream of the fan-out.
   */
 object Routing {
 
@@ -51,37 +57,29 @@ object Routing {
         lower(changes("op")) === streams("s_op"))
       .drop("s_resource", "s_op")
 
-  private val MatchType =
-    "array<struct<stream:string,routing_key:string,topic:string>>"
-
   /** [[route]] with the dimension INLINED into the plan: the stream config
     * is a closed, tiny set (it comes from config, not data), so instead of
     * broadcasting a dimension table every micro-batch — a fresh
     * BroadcastExchange build is ~50–90 ms per batch, the dominant term of
-    * the micro-batch latency floor — the (resource, op) → matches mapping
-    * folds into a literal CASE over array-of-struct constants and the
-    * fan-out is an `explode`. Identical inner-join semantics (an unmatched
-    * event's NULL match list explodes to zero rows; N subscribers on one
-    * (resource, op) explode to N rows), pure whole-stage codegen, zero
-    * exchanges at ANY scale. Equality with the join form is pinned by
-    * RoutingSpec; keep `route` for a genuinely dynamic dimension. */
+    * the micro-batch latency floor — the config is built once into a
+    * [[StreamTable]], one native expression looks up each row's
+    * (resource, op) in it, and the fan-out is an `explode` of the matches.
+    * Identical inner-join semantics (an unmatched event's NULL match list
+    * explodes to zero rows; N subscribers on one (resource, op) explode to
+    * N rows), pure whole-stage codegen, zero exchanges at ANY scale.
+    *
+    * Ops match by an ASCII case fold over the row's bytes, which matches
+    * exactly the rows `lower(op)` matches (the argument is at
+    * [[StreamTable]]). `lower` would build ICU's case table (>1 s of CPU) on
+    * the first batch, and a DDL-string type would start the SQL parser while
+    * the frame is built (~1.5 s), so neither is used here. Equality with the join
+    * form is pinned by RoutingInlineSpec; keep `route` for a genuinely
+    * dynamic dimension. */
   def routeInline(changes: DataFrame, streams: Seq[StreamDef]): DataFrame = {
-    val byPair = streams.flatMap { s =>
-        val n = s.normalized
-        n.operations.map(op =>
-          ((n.resource, op), (n.name, n.routingKey, n.destination)))
-      }.groupBy(_._1).view.mapValues(_.map(_._2)).toSeq
-      .sortBy(_._1) // deterministic branch order
-    val matches = byPair.foldLeft(lit(null).cast(MatchType)) {
-      case (acc, ((res, op), ms)) =>
-        when(col("resource") === res && lower(col("op")) === op,
-          array(ms.map { case (st, rk, tp) =>
-            struct(lit(st).as("stream"), lit(rk).as("routing_key"),
-              lit(tp).as("topic"))
-          }: _*)).otherwise(acc)
-    }
     val kept = changes.columns
-    changes.withColumn("__match", explode(matches))
+    changes
+      .withColumn("__match",
+        explode(new StreamTable(streams).route(col("resource"), col("op"))))
       .select(kept.map(col) ++ Seq(col("__match.stream").as("stream"),
         col("__match.routing_key").as("routing_key"),
         col("__match.topic").as("topic")): _*)

@@ -2,6 +2,7 @@ package graft.serialization
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StringType
 
 /** ChangeEvent → JSON bytes, matching the reference's envelope exactly
   * (reference: src/serialization/json.zig:17-126):
@@ -129,7 +130,7 @@ object JsonEnvelope {
 
   /** `"name":<scalar>` fragment for a numeric column (bigint/double cast). */
   def numField(name: String, c: Column): Column =
-    concat(lit("\"" + name + "\":"), c.cast("string"))
+    concat(lit("\"" + name + "\":"), c.cast(StringType))
 
   def strField(name: String, c: Column): Column =
     concat(lit("\"" + name + "\":\""), escapeCol(c), lit("\""))
@@ -142,14 +143,16 @@ object JsonEnvelope {
     concat(lit("{"), concat_ws(",", fields: _*), lit("}"))
 
   /** Envelope column: op/resource/lsn assumed clean identifiers (they are
-    * produced by the source, not user data); data is pre-serialized JSON. */
+    * produced by the source, not user data); data is pre-serialized JSON.
+    * Casts name a `DataType`, never a DDL string: a string type is parsed by
+    * the SQL parser, whose first use costs the engine ~1.5 s of set-up. */
   def envelopeCol(op: Column, dataJson: Column, resource: Column,
                   timestamp: Column, lsn: Column): Column =
     concat(
       lit("{\"op\":\""), op,
       lit("\",\"data\":"), dataJson,
       lit(",\"meta\":{\"source\":\"postgres\",\"resource\":\""), resource,
-      lit("\",\"timestamp\":"), timestamp.cast("string"),
+      lit("\",\"timestamp\":"), timestamp.cast(StringType),
       lit(",\"lsn\":\""), lsn,
       lit("\"}}"))
 }

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.config.StreamDef
-import graft.functions.RowJsonKey
+import graft.functions.{RowJsonKey, StreamTable}
 import graft.operators.Routing
 import graft.source.wal.PgWalSource
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -64,27 +64,18 @@ object StreamingPipeline {
         "resource", "commit_ts")
   }
 
-  /** The per-(stream, op) tally pairs, in the fixed order the observe()
-    * columns are emitted (A1; reference processor.zig:174-183). The stream
-    * set is closed config, so the tally is a handful of codegen'd
-    * conditional-sum aggregates riding the existing observation — zero extra
-    * jobs, zero driver-side collect. [[graft.metrics.GraftQueryListener]]
-    * reads them back positionally through this same function. */
-  def tallyPairs(streams: Seq[StreamDef]): Seq[(String, String)] =
-    streams.flatMap { s =>
-      val n = s.normalized
-      n.operations.map(op => (n.name, op))
-    }
-
-  private def observed(frame: DataFrame, streams: Seq[StreamDef]): DataFrame = {
-    val tallies = tallyPairs(streams).zipWithIndex.map { case ((st, op), i) =>
-      sum(when(col("stream") === st && lower(col("op")) === op, 1L)
-        .otherwise(0L)).as(s"tally_$i")
-    }
+  /** The per-batch observation: `events`, `max_commit_ts` and `tallies`,
+    * one row count per (stream, op) in [[StreamTable.tallyPairs]] order (A1;
+    * reference processor.zig:174-183). The tally is ONE aggregate over a
+    * config-table lookup per row, riding the existing observation — zero
+    * extra jobs, no collect, and three columns however many
+    * (stream, op) pairs are configured. [[graft.metrics.GraftQueryListener]]
+    * reads the array back through the same table. */
+  private def observed(frame: DataFrame, streams: Seq[StreamDef]): DataFrame =
     frame.observe("graft",
       count(lit(1)).as("events"),
-      (max(col("commit_ts")).as("max_commit_ts") +: tallies): _*)
-  }
+      max(col("commit_ts")).as("max_commit_ts"),
+      new StreamTable(streams).tally(col("stream"), col("op")).as("tallies"))
 
   /** Start the job with a file sink per topic (Kafka stand-in when no broker
     * is available) or the real Kafka sink when `kafkaBootstrap` is set.

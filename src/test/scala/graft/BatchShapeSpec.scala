@@ -4,6 +4,7 @@ import graft.operators.Routing
 import graft.sink.kafka.WireFrameProducer
 import graft.source.wal.{WalFixture, WalLog}
 import graft.streaming.StreamingPipeline
+import org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper
 import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.{Files, Paths}
@@ -11,7 +12,9 @@ import java.nio.file.{Files, Paths}
 /** Ratchet on the shipped path's per-micro-batch shape, with the wire
   * producer against the scripted broker: each batch with data is ONE SQL
   * execution (the producer runs the batch's planned rows, no nested query),
-  * and the routing key is not re-parsed by `get_json_object`. */
+  * the routing key is not re-parsed by `get_json_object`, routing and
+  * tallies use no case mapping and no CASE chain, and the observation has
+  * three columns however many (stream, op) pairs are configured. */
 class BatchShapeSpec extends AnyFunSuite {
   private lazy val spark = SparkTestBase.spark
 
@@ -74,6 +77,37 @@ class BatchShapeSpec extends AnyFunSuite {
     } finally {
       spark.sparkContext.removeSparkListener(listener)
       broker.close()
+    }
+  }
+
+  test("no case mapping or CASE in the shipped query's plans; a 3-column observation") {
+    val wal = walDir()
+    // 9 and 1 (stream, op) pairs
+    Seq(Routing.fixtureStreams, Routing.fixtureStreams.take(1).map(
+      _.copy(operations = Seq("insert")))).foreach { streams =>
+      val ckpt = Files.createTempDirectory("graft-shape-ckpt").toString
+      val broker = new FakeKafkaBroker(streams.map(_.destination -> 1).toMap)
+      val q = StreamingPipeline.start(spark, wal, streams, ckpt,
+        outDir = wal + "-unused",
+        producer = Some(new WireFrameProducer("localhost", broker.port)),
+        triggerMs = 25L, maxEventsPerBatch = 20)
+      try {
+        q.processAllAvailable()
+        val exec = q.asInstanceOf[StreamingQueryWrapper].streamingQuery.lastExecution
+        Seq(exec.optimizedPlan, exec.executedPlan).foreach { plan =>
+          val found = plan.flatMap(_.expressions.flatMap(_.collect {
+            case e if Set("Lower", "Upper", "InitCap", "CaseWhen")(
+              e.getClass.getSimpleName) => e.getClass.getSimpleName }))
+          assert(found.isEmpty, plan.treeString)
+        }
+        val observed = q.recentProgress.filter(_.numInputRows > 0)
+          .map(_.observedMetrics.get("graft"))
+        assert(observed.nonEmpty)
+        observed.foreach(row => assert(row.length == 3, row.schema))
+      } finally {
+        q.stop()
+        broker.close()
+      }
     }
   }
 }

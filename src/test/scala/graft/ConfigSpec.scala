@@ -2,6 +2,7 @@ package graft
 
 import graft.config.{EngineConfig, StreamDef}
 import org.scalatest.funsuite.AnyFunSuite
+import java.util.Locale
 
 class ConfigSpec extends AnyFunSuite {
   private def base(streams: StreamDef*) =
@@ -19,6 +20,17 @@ class ConfigSpec extends AnyFunSuite {
     assert(s.resource == "public.users")
     val q = StreamDef("t", "other.users", Seq("insert"), "d").normalized
     assert(q.resource == "other.users")
+  }
+
+  test("op normalization and validation do not depend on the default locale") {
+    // under tr-TR, "INSERT".toLowerCase is "ınsert" (dotless i)
+    val before = Locale.getDefault
+    Locale.setDefault(Locale.forLanguageTag("tr-TR"))
+    try {
+      val s = StreamDef("t", "users", Seq("INSERT", "Delete", "READ"), "d")
+      assert(s.normalized.operations == Seq("insert", "delete", "read"))
+      assert(base(s).validate.isEmpty, base(s).validate)
+    } finally Locale.setDefault(before)
   }
 
   test("closed enums for source/sink/format (config.zig:21-26)") {

@@ -9,6 +9,18 @@ object SparkTestBase {
   lazy val spark: SparkSession = GraftSession.getOrCreate(cpus = 4)
   val sf = "/root/testdata/sf0.001"
 
+  /** Run `f` with codegen failures raised, not silently interpreted. */
+  def codegenOnly[T](f: => T): T = {
+    val keys = Seq("spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY",
+      "spark.sql.codegen.fallback" -> "false")
+    val before = keys.map { case (k, _) => k -> spark.conf.getOption(k) }
+    keys.foreach { case (k, v) => spark.conf.set(k, v) }
+    try f finally before.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
   // Stale test-fixture sweeper: specs create graft-* temp dirs (WAL
   // fixtures, spool dirs, anomaly sources…) that accumulate across runs —
   // the same leftover class whose 25 GB livepg variant poisoned the r12

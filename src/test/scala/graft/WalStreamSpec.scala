@@ -154,14 +154,16 @@ class WalStreamSpec extends AnyFunSuite {
         regexp_replace(col("value"), "\"lsn\":\"[0-9A-F/]+\"", "\"lsn\":\"\"").as("v"))
       assert(stripLsn(got).distinct().exceptAll(stripLsn(expected).distinct()).count() == 0)
       assert(stripLsn(expected).distinct().exceptAll(stripLsn(got).distinct()).count() == 0)
-      // per-(stream, op) tallies now ride observe(): totals must equal the
-      // delivered per-stream counts
-      val perStream = got.groupBy("stream").count().collect()
-        .map(r => r.getString(0) -> r.getLong(1)).toMap
-      var sums = Map.empty[String, Long].withDefaultValue(0L)
+      // per-(stream, op) tallies ride observe(), merged across the slice
+      // partitions: each must equal the delivered per-(stream, lower(op))
+      // count (so their per-stream totals equal the delivered counts too)
+      val perPair = got.groupBy(col("stream"), lower(col("op"))).count().collect()
+        .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
+      var tallies = Map.empty[(String, String), Long]
       metrics.streamOpCounts.forEach((k: (String, String), v: java.util.concurrent.atomic.AtomicLong) =>
-        sums = sums.updated(k._1, sums(k._1) + v.get()))
-      assert(sums == perStream)
+        tallies = tallies.updated(k, v.get()))
+      assert(perPair.size > 1, perPair)
+      assert(tallies == perPair)
     } finally spark.streams.removeListener(listener)
   }
 
