@@ -13,10 +13,10 @@ import org.apache.spark.sql.SparkSession
   *   runMain graft.Main <config.json> <walDir> <checkpointDir> [outDir]
   * }}}
   *
-  * With `sink.type=kafka` and GRAFT_KAFKA_BOOTSTRAP set, frames go to Kafka
-  * with the reference's producer semantics; otherwise the file sink stands
-  * in. Metrics HTTP (/metrics /healthz /readyz) serves on GRAFT_HTTP_PORT
-  * (default: ephemeral).
+  * With GRAFT_KAFKA_BOOTSTRAP set (`wire://` or `wire+tls://`, see
+  * [[graft.sink.kafka.WireEndpoint]]), frames go to Kafka through the wire
+  * producer; otherwise the file sink stands in. Metrics HTTP (/metrics
+  * /healthz /readyz) serves on GRAFT_HTTP_PORT (default: ephemeral).
   */
 object Main {
   def main(args: Array[String]): Unit = {
@@ -39,6 +39,11 @@ object Main {
           "unset — refusing to start a pipeline that would ingest nothing")
     }
 
+    // the sink bootstrap too: a malformed or non-wire one must fail here,
+    // not at the first snapshot produce after the slot already exists
+    val sinkEndpoint = sys.env.get("GRAFT_KAFKA_BOOTSTRAP")
+      .map(graft.sink.kafka.WireEndpoint.parse(_))
+
     val spark = GraftSession.getOrCreate()
 
     val metrics = new GraftMetrics
@@ -57,7 +62,8 @@ object Main {
     // 6+ hours with only DestroyJavaVM + HTTP-Dispatcher running). Every
     // exit from main MUST go through sys.exit so hooks fire and the
     // process terminates with a diagnosable status.
-    try runPipeline(config, spark, metrics, http, walDir, ckptDir, outDir)
+    try runPipeline(config, sinkEndpoint, spark, metrics, http, walDir,
+      ckptDir, outDir)
     catch {
       case e: Throwable =>
         e.printStackTrace()
@@ -89,6 +95,7 @@ object Main {
     }
 
   private def runPipeline(config: graft.config.EngineConfig,
+      sinkEndpoint: Option[graft.sink.kafka.WireEndpoint.Ep],
       spark: SparkSession, metrics: GraftMetrics, http: MetricsHttp,
       walDir: String, ckptDir: String, outDir: String): Unit = {
 
@@ -98,23 +105,18 @@ object Main {
     // before the marker drops, then CopyBoth streaming into the WAL dir the
     // source reads (reference: src/main.zig:179-238 wiring). Without the
     // block, walDir is expected to be fed externally (tests, replays).
-    // ONE producer decision for both delivery phases: snapshot READ events
-    // and streamed changes must reach the SAME destination (a Kafka consumer
+    // ONE producer for both delivery phases: snapshot READ events and
+    // streamed changes must reach the SAME destination (a Kafka consumer
     // must see the initial state before the first I/U/D)
-    // wire://host:port selects the in-repo wire producer (no kafka jars)
     val producer: Option[graft.sink.FrameProducer] =
-      sys.env.get("GRAFT_KAFKA_BOOTSTRAP").map(b =>
-        graft.sink.kafka.WireFrameProducer.fromBootstrap(b)
-          .getOrElse(new graft.sink.KafkaFrameProducer(b)))
+      sinkEndpoint.map(graft.sink.kafka.WireFrameProducer(_))
 
     val spooler = config.postgres.map { pg =>
       val ep = graft.source.postgres.SocketCopyBothChannel.parseUri(
         pg.connectionUri.get) // presence enforced at startup above
-      // chunked delivery: bounded driver memory for any table size; the
-      // at-scale alternative is the partitioned JdbcSnapshot batch job
-      // under an EXPORT_SNAPSHOT name — same events, many scanners
+      // chunked delivery: bounded driver memory for any table size
       val delivery = new graft.streaming.SnapshotDelivery(
-        spark, config.streams, producer, outDir)
+        spark, config.streams, producer, outDir, metrics = Some(metrics))
       def bootstrapOnce() = {
         val session = graft.source.postgres.PgSession.connect(ep,
           queryTimeoutMs = pg.queryTimeoutMs)

@@ -109,6 +109,22 @@ final class StreamTable(streams: Seq[StreamDef]) extends Serializable {
     }
   }
 
+  /** Per [[tallyPairs]] slot, the rows routing the (resource, op) events
+    * yields: what the `tally` aggregate counts over the routed frame,
+    * computed on the driver. */
+  def tallyRouted(events: Iterator[(String, String)]): Array[Long] = {
+    val counts = new Array[Long](tallyPairs.size)
+    events.foreach { case (resource, op) =>
+      val o = UTF8String.fromString(op)
+      val m = matches(UTF8String.fromString(resource), o)
+      if (m != null) (0 until m.numElements).foreach { i =>
+        val s = slot(m.getStruct(i, 3).getUTF8String(0), o)
+        if (s >= 0) counts(s) += 1
+      }
+    }
+    counts
+  }
+
   /** `array<struct<stream, routing_key, topic>>` of the (resource, op)
     * columns: the rows [[matches]] returns, null for none. */
   def route(resource: Column, op: Column): Column =

@@ -18,7 +18,12 @@ final class GraftMetrics(nowS: () => Long = () => System.currentTimeMillis() / 1
     * stall check processor.zig:393-399). */
   val LivenessWindowS = 90L
 
+  /** Changes the streaming query processed; snapshot READs are counted in
+    * [[snapshotEvents]] instead. */
   val eventsProcessed = new AtomicLong(0)
+  /** Snapshot READ events delivered outside the streaming query
+    * ([[graft.streaming.SnapshotDelivery]]). */
+  val snapshotEvents = new AtomicLong(0)
   val batchesProcessed = new AtomicLong(0)
   val lagSeconds = new AtomicLong(0)
   val lastActivityS = new AtomicLong(nowS())
@@ -62,6 +67,12 @@ final class GraftMetrics(nowS: () => Long = () => System.currentTimeMillis() / 1
     streamOpCounts.computeIfAbsent((stream, op), _ => new AtomicLong(0))
       .addAndGet(n)
 
+  /** Adds `counts(i)` to the i-th (stream, op) pair of `pairs`. */
+  def tally(pairs: Seq[(String, String)], counts: Iterator[Long]): Unit =
+    pairs.iterator.zip(counts).foreach { case ((stream, op), n) =>
+      if (n > 0) tally(stream, op, n)
+    }
+
   def recordBatch(events: Long, maxCommitTs: Option[Long]): Unit = {
     eventsProcessed.addAndGet(events)
     batchesProcessed.incrementAndGet()
@@ -100,6 +111,7 @@ final class GraftMetrics(nowS: () => Long = () => System.currentTimeMillis() / 1
       sb.append(s"$name $v\n")
     }
     metric("graft_events_processed_total", "counter", eventsProcessed.get())
+    metric("graft_snapshot_events_total", "counter", snapshotEvents.get())
     metric("graft_batches_processed_total", "counter", batchesProcessed.get())
     metric("graft_replication_lag_seconds", "gauge", lagSeconds.get())
     metric("graft_up", "gauge", if (live) 1 else 0)
@@ -145,9 +157,7 @@ final class GraftQueryListener(metrics: GraftMetrics,
       val events = if (row.isNullAt(0)) 0L else row.getLong(0)
       val maxTs = if (row.isNullAt(1)) None else Some(row.getLong(1))
       metrics.recordBatch(events, maxTs)
-      tallyPairs.iterator.zip(row.getSeq[Long](2)).foreach { case ((stream, op), n) =>
-        if (n > 0) metrics.tally(stream, op, n)
-      }
+      metrics.tally(tallyPairs, row.getSeq[Long](2).iterator)
     } else metrics.heartbeat()
   }
   /** A no-data trigger posts QueryIdleEvent (not QueryProgressEvent) on
@@ -160,28 +170,4 @@ final class GraftQueryListener(metrics: GraftMetrics,
   override def onQueryTerminated(event: QueryTerminatedEvent): Unit = {
     event.exception.foreach(metrics.lastError.set)
   }
-}
-
-/** V1 — pre-flight catalog checks, as the exact SQL the driver runs over
-  * JDBC before starting a query (reference: src/source/postgres/validator.zig:76-179).
-  * Kept as data so deployments without a live Postgres can still unit-test
-  * the contract. */
-object PreflightChecks {
-  /** Resource/column names are interpolated into string LITERALS below —
-    * double any quote so a hostile config value can't break out of the
-    * literal (the config layer also restricts these, belt + braces). */
-  private def lit(s: String): String = s.replace("'", "''")
-  /** server_version_num ≥ 120000 (Postgres 12+). */
-  val serverVersion = "SELECT current_setting('server_version_num')::int >= 120000"
-  val walLevel = "SELECT current_setting('wal_level') = 'logical'"
-  def tableExists(resource: String) =
-    s"SELECT to_regclass('${lit(resource)}') IS NOT NULL"
-  def columnExists(resource: String, column: String) =
-    s"""SELECT EXISTS (SELECT 1 FROM pg_attribute
-       | WHERE attrelid = to_regclass('${lit(resource)}')
-       |   AND attname = '${lit(column)}' AND NOT attisdropped)""".stripMargin
-  /** REPLICA IDENTITY FULL required for delete-tracking streams
-    * (validator.zig:151-179). */
-  def replicaIdentityFull(resource: String) =
-    s"SELECT relreplident = 'f' FROM pg_class WHERE oid = to_regclass('${lit(resource)}')"
 }

@@ -102,13 +102,8 @@ final class FramesTable(options: CaseInsensitiveStringMap)
           if (path != null)
             new FramesFileStreamingWrite(path, info.schema(),
               options.get("failCommitsToken"))
-          else {
-            require(graft.sink.kafka.WireEndpoint.accepts(bootstrap),
-              s"frames sink bootstrap must be wire://host:port or " +
-                s"wire+tls://host:port?ca=…, got '$bootstrap'")
-            new FramesWireStreamingWrite(
-              graft.sink.kafka.WireEndpoint.parse(bootstrap), info.schema())
-          }
+          else new FramesWireStreamingWrite(
+            graft.sink.kafka.WireEndpoint.parse(bootstrap), info.schema())
       }
     }
 }

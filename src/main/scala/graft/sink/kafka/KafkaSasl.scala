@@ -38,8 +38,9 @@ object KafkaSasl {
     case m => throw new IllegalArgumentException(s"not a SCRAM mechanism: $m")
   }
 
-  /** Client credentials; the password is resolved (from its env var or a
-    * direct option) BEFORE this is built — see KafkaSinkConfig.wireSasl. */
+  /** Client credentials; the password is resolved from the env var the
+    * bootstrap's `saslpassenv` names BEFORE this is built — see
+    * [[WireEndpoint.parse]]. */
   final case class Config(mechanism: String, username: String,
       password: String) {
     require(Mechanisms(mechanism),

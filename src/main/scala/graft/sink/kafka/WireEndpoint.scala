@@ -59,6 +59,11 @@ object WireEndpoint {
     bootstrap != null &&
       (bootstrap.startsWith("wire://") || bootstrap.startsWith("wire+tls://"))
 
+  /** The bootstrap forms [[parse]] accepts, as its errors name them. */
+  val Forms: String = "wire://host:port or " +
+    "wire+tls://host:port?ca=<path>[&verify=full|ca|require], either with " +
+    "optional saslmech=…&sasluser=…&saslpassenv=<ENV_NAME>"
+
   /** @param env environment lookup for `saslpassenv` resolution —
     *   injectable so tests can supply credentials (the JVM cannot set
     *   real process env); production uses the default `sys.env.get`.
@@ -67,7 +72,8 @@ object WireEndpoint {
     *   (r16 advice). */
   def parse(bootstrap: String,
       env: String => Option[String] = sys.env.get): Ep = {
-    require(accepts(bootstrap), s"not a wire bootstrap: '$bootstrap'")
+    require(accepts(bootstrap),
+      s"Kafka bootstrap must be $Forms, got '$bootstrap'")
     val tlsScheme = bootstrap.startsWith("wire+tls://")
     val rest =
       bootstrap.stripPrefix(if (tlsScheme) "wire+tls://" else "wire://")
@@ -96,8 +102,8 @@ object WireEndpoint {
         case other => throw new IllegalArgumentException(
           s"unknown verify '$other' (allowed: full, ca, require)")
       }
-      // values arrive percent-encoded (secureWireBootstrap encodes so a
-      // path containing '&' survives the query split) — decode here
+      // values may arrive percent-encoded (a path containing '&' must be
+      // written %26 to survive the query split) — decode here
       Some(PgTls.SslConfig(mode,
         params.get("ca").map(java.net.URLDecoder.decode(_, "UTF-8"))))
     }

@@ -50,14 +50,15 @@ object WireFrameProducer {
   def fromBootstrap(bootstrap: String,
       env: String => Option[String] = sys.env.get)
       : Option[WireFrameProducer] =
-    if (WireEndpoint.accepts(bootstrap)) {
-      val ep = WireEndpoint.parse(bootstrap, env)
-      // the SASL config MUST ride along (r16 review finding): dropping it
-      // here silently downgraded the Main/foreachBatch path to an
-      // unauthenticated connect — the exact class the endpoint's
-      // validators exist to prevent
-      Some(new WireFrameProducer(ep.host, ep.port, ep.tls, ep.sasl))
-    } else None
+    if (WireEndpoint.accepts(bootstrap)) Some(apply(WireEndpoint.parse(bootstrap, env)))
+    else None
+
+  /** The producer for a parsed endpoint. The SASL config MUST ride along
+    * (r16 review finding): dropping it silently downgraded the
+    * foreachBatch path to an unauthenticated connect — the exact class
+    * the endpoint's validators exist to prevent. */
+  def apply(ep: WireEndpoint.Ep): WireFrameProducer =
+    new WireFrameProducer(ep.host, ep.port, ep.tls, ep.sasl)
 
   /** Position of string column `name` in a frame to produce. */
   private def ordinal(schema: StructType, name: String): Int = {

@@ -25,9 +25,10 @@ import javax.net.ssl.{SSLContext, SSLSocket, TrustManager, TrustManagerFactory, 
   * (reference: src/source/postgres/replication_protocol.zig:142-143 — "set
   * sslmode=require or higher").
   *
-  * Validation happens at construction (the Kafka sink's security-enum
-  * pattern, sink/KafkaSinkConfig.scala): a typo'd mode or a verify mode
-  * without a root cert fails before any socket is opened.
+  * Validation happens at construction: a typo'd mode or a verify mode
+  * without a root cert fails before any socket is opened. The Kafka wire
+  * producer's `wire+tls://` bootstrap builds the same config
+  * (sink/kafka/WireEndpoint.scala).
   */
 object PgTls {
 

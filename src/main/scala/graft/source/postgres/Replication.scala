@@ -78,7 +78,7 @@ object Replication {
 
   /** How slot creation exposes its consistent snapshot (public replication
     * grammar): EXPORT returns `snapshot_name` for OTHER sessions to adopt
-    * (the parallel multi-connection snapshot path — [[JdbcSnapshot]]);
+    * (the parallel multi-connection snapshot path — [[WireSnapshot]]);
     * USE pins THIS session's open transaction to the snapshot, so the
     * single-session bootstrap can scan tables and then stream with no second
     * connection; NOTHING skips the snapshot (streaming-only streams). */
@@ -106,15 +106,15 @@ object Replication {
       s"""(proto_version '1', publication_names '${ident(publication)}')"""
 
   /** Snapshot session setup: the initial scan must see exactly the slot's
-    * consistent point (snapshot.zig:75-100). */
+    * consistent point (snapshot.zig:75-100). Each [[WireSnapshot]] scan
+    * session runs these to adopt the exported snapshot. */
   def snapshotSessionSql(snapshotName: String): Seq[String] = Seq(
     "BEGIN ISOLATION LEVEL REPEATABLE READ",
     s"SET TRANSACTION SNAPSHOT '$snapshotName'")
 
   /** Cursor-batched table scan for the snapshot phase (snapshot.zig:144-152).
-    * At cluster scale the equivalent is a partitioned `spark.read.jdbc` with
-    * predicate ranges on the PK — same transaction-snapshot pin per
-    * partition connection. */
+    * [[WireSnapshot]] runs one such cursor per primary-key range, each on
+    * its own session pinned to the same exported snapshot. */
   def declareCursor(cursor: String, resource: String): String =
     s"DECLARE ${ident(cursor)} CURSOR FOR SELECT * FROM ${ident(resource)}"
 

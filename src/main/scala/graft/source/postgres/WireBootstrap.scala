@@ -22,10 +22,10 @@ import graft.source.pgoutput.PgOutputMessage.{NullDatum, TextDatum}
   *     `consistent_point` (the dedup boundary consumers key on),
   *  4. hand the session to CopyBoth streaming from that same point.
   *
-  * At cluster scale the snapshot phase is instead a partitioned
-  * [[JdbcSnapshot]] batch job under an `EXPORT_SNAPSHOT` name (massively
-  * parallel scan straight to the sink); this single-session cursor path is
-  * the zero-dependency bootstrap and the semantics oracle for both.
+  * [[WireSnapshot]] is the partitioned form of the snapshot phase: many
+  * sessions scanning primary-key ranges under one `EXPORT_SNAPSHOT` name.
+  * `graft.Main` runs this single-session cursor path, which is also the
+  * semantics oracle for the partitioned scan.
   */
 object WireBootstrap {
 

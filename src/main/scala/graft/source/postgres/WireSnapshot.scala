@@ -57,8 +57,7 @@ object WireSnapshot {
   private def adopt(s: PgSession, snapshotName: String): Unit = {
     require(snapshotName.matches("[0-9A-Fa-f-]+"),
       s"implausible snapshot name: '$snapshotName'")
-    s.simpleQuery("BEGIN ISOLATION LEVEL REPEATABLE READ")
-    s.simpleQuery(s"SET TRANSACTION SNAPSHOT '$snapshotName'")
+    Replication.snapshotSessionSql(snapshotName).foreach(s.simpleQuery)
   }
 
   /** Scan `resource` under `snapshotName` in `numPartitions` parallel

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.config.StreamDef
+import graft.functions.StreamTable
 import graft.model.ChangeEvent
 import org.apache.spark.sql.SparkSession
 import scala.collection.mutable.ArrayBuffer
@@ -21,8 +22,11 @@ import scala.collection.mutable.ArrayBuffer
   *  - '''Bounded memory''': the driver holds at most `chunkRows` events —
   *    each full chunk is delivered and dropped, so the cursor scan's memory
   *    bound survives arbitrarily large tables (the reference streams
-  *    snapshot rows through the same bounded pipeline as changes;
-  *    at cluster scale the partitioned JdbcSnapshot path applies).
+  *    snapshot rows through the same bounded pipeline as changes).
+  *
+  * With `metrics`, each delivered chunk adds to `graft_snapshot_events_total`
+  * and, per routed stream, to `graft_stream_events_total{op="read"}`:
+  * counted on the driver through the stream table, no extra Spark job.
   *
   * `flush()` is the delivery barrier [[graft.source.postgres.SnapshotBootstrap]]
   * requires before the marker drops: when it returns, every emitted event is
@@ -34,8 +38,10 @@ final class SnapshotDelivery(
     streams: Seq[StreamDef],
     producer: Option[graft.sink.FrameProducer],
     outDir: String,
-    chunkRows: Int = 50000) {
+    chunkRows: Int = 50000,
+    metrics: Option[graft.metrics.GraftMetrics] = None) {
 
+  private val table = new StreamTable(streams)
   private val buf = ArrayBuffer.empty[ChangeEvent]
   private var delivered = 0L
 
@@ -64,6 +70,11 @@ final class SnapshotDelivery(
           .option("compression", "none").save(snapshotOutDir)
     }
     delivered += buf.size
+    metrics.foreach { m =>
+      m.snapshotEvents.addAndGet(buf.size)
+      m.tally(table.tallyPairs,
+        table.tallyRouted(buf.iterator.map(e => (e.meta.resource, e.op))).iterator)
+    }
     buf.clear()
   }
 }

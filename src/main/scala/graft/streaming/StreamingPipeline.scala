@@ -78,7 +78,8 @@ object StreamingPipeline {
       new StreamTable(streams).tally(col("stream"), col("op")).as("tallies"))
 
   /** Start the job with a file sink per topic (Kafka stand-in when no broker
-    * is available) or the real Kafka sink when `kafkaBootstrap` is set.
+    * is available), or deliver through `producer` or the wire client of a
+    * `kafkaBootstrap` ([[graft.sink.kafka.WireEndpoint]]).
     *
     * Per-batch metrics (event count, lag, per-(stream,op) tallies) all ride
     * the `observe()` aggregates — consume them by attaching a
@@ -87,12 +88,12 @@ object StreamingPipeline {
     * Sink shape: the stand-in path writes through Spark's native streaming
     * parquet sink — no foreachBatch, so each micro-batch reuses the
     * incremental plan instead of re-deriving a batch write plan (~0.3 s per
-    * batch back). The Kafka path keeps foreachBatch (no kafka connector in
-    * this build's jars); there, hash-partitioning by Kafka key + sorting by
-    * LSN within partitions restores the per-key delivery order CDC consumers
-    * rely on while spreading produce over `sinkParallelism` tasks. Delivery
-    * is at-least-once on batch retry — the reference's contract; consumers
-    * dedup on meta.lsn. */
+    * batch back). The producer path runs through foreachBatch, whose batch
+    * frame (unlike a streaming plan) can sort within partitions: there,
+    * hash-partitioning by Kafka key + sorting by LSN within partitions
+    * restores the per-key delivery order CDC consumers rely on while
+    * spreading produce over `sinkParallelism` tasks. Delivery is
+    * at-least-once on batch retry; consumers dedup on meta.lsn. */
   def start(spark: SparkSession, walDir: String, streams: Seq[StreamDef],
       checkpointDir: String, outDir: String,
       kafkaBootstrap: Option[String] = None,
@@ -112,22 +113,19 @@ object StreamingPipeline {
       streams)
 
     // delivery seam: an explicit producer wins (fail-injection tests, custom
-    // transports); with sinkFormat="frames" a wire:// bootstrap goes through
-    // the DSv2 sink (per-task producer sockets, flush on task commit);
-    // otherwise a wire:// bootstrap selects the in-repo foreachBatch wire
-    // producer and any other bootstrap the stock Kafka sink
-    // WireEndpoint.accepts, not a wire:// prefix check: a wire+tls://
-    // bootstrap must route through the SAME DSv2 path (the pool and the
-    // per-task producers are TLS-capable) — a prefix check silently
-    // demoted TLS runs to the foreachBatch producer, which asyncProgress
-    // then rejects at query start (r15 review finding)
-    val dsv2Wire = producer.isEmpty && sinkFormat == "frames" &&
-      kafkaBootstrap.exists(graft.sink.kafka.WireEndpoint.accepts)
+    // transports); with sinkFormat="frames" a bootstrap goes through the
+    // DSv2 sink (per-task producer sockets, flush on task commit), else the
+    // foreachBatch wire producer. Parsed here, so a non-wire bootstrap fails
+    // before the query starts. wire+tls:// takes the SAME DSv2 path as
+    // wire:// — a wire:// prefix check once demoted TLS runs to the
+    // foreachBatch producer, which asyncProgress rejects (r15 review finding)
+    val endpoint =
+      if (producer.isDefined) None
+      else kafkaBootstrap.map(graft.sink.kafka.WireEndpoint.parse(_))
+    val dsv2Wire = endpoint.isDefined && sinkFormat == "frames"
     val frameProducer: Option[graft.sink.FrameProducer] =
       if (dsv2Wire) None
-      else producer.orElse(kafkaBootstrap.map(b =>
-        graft.sink.kafka.WireFrameProducer.fromBootstrap(b)
-          .getOrElse(new graft.sink.KafkaFrameProducer(b))))
+      else producer.orElse(endpoint.map(graft.sink.kafka.WireFrameProducer(_)))
 
     val writer: DataStreamWriter[Row] = frameProducer match {
       case Some(p) =>

@@ -4,7 +4,6 @@ import graft.operators.Routing
 import graft.source.pgoutput.{PgOutputDecodeException, PgOutputDecoder, PgOutputEncoder, PgOutputMessage}
 import graft.source.pgoutput.PgOutputMessage._
 import graft.source.pgoutput.PgOutputMessages._
-import graft.source.postgres.JdbcSnapshot
 import graft.streaming.StreamingPipeline
 import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
@@ -101,24 +100,5 @@ class HardeningSpec extends AnyFunSuite {
     val after = spark.read.parquet(out)
     assert(after.count() == n1, "resent LSNs must not duplicate deliveries")
     assert(after.groupBy("lsn").count().filter(col("count") > 1).count() == 0)
-  }
-
-  // ---- S6 scale path: partitioned snapshot predicates ----
-  test("snapshot partition predicates are disjoint and complete") {
-    val preds = JdbcSnapshot.partitionPredicates("id", 0L, 1000L, 4)
-    assert(preds == Seq("id < 250", "id >= 250 AND id < 500",
-      "id >= 500 AND id < 750", "id >= 750"))
-    // degenerate cases collapse to a full scan
-    assert(JdbcSnapshot.partitionPredicates("id", 5L, 5L, 4) == Seq("1=1"))
-    assert(JdbcSnapshot.partitionPredicates("id", 0L, 2L, 10).nonEmpty)
-    // every fixture customer row falls in exactly one partition
-    val c = spark.read.parquet(s"${SparkTestBase.sf}/customer.parquet")
-    val total = c.count()
-    val perPart = JdbcSnapshot.partitionPredicates("c_custkey", 1L, 150L, 3)
-      .map(p => c.where(p).count())
-    assert(perPart.sum == total)
-    assert(JdbcSnapshot.sessionInit("snap_1").contains("SET TRANSACTION SNAPSHOT 'snap_1'"))
-    assert(JdbcSnapshot.readOptions("jdbc:postgresql://h/db", "public.users", "s")
-      .get("isolationLevel").contains("REPEATABLE_READ"))
   }
 }

@@ -1,7 +1,7 @@
 package graft
 
 import graft.operators.Routing
-import graft.sink.{FrameProducer, KafkaFrameProducer, KafkaSinkConfig}
+import graft.sink.FrameProducer
 import graft.source.wal.WalFixture
 import graft.streaming.StreamingPipeline
 import org.apache.spark.sql.DataFrame
@@ -14,9 +14,9 @@ import java.util.concurrent.atomic.AtomicInteger
 /** K1/K2 delivery semantics without a broker, via the [[FrameProducer]]
   * seam: fail-fast on produce error → restart from checkpoint → redelivery
   * → consumer-side dedup collapse (the reference's contract,
-  * src/sink/kafka/producer.zig:430-502), and security-config rejection
-  * (src/sink/kafka/producer_test.zig:70-282 — bad TLS must fail up front,
-  * never silently downgrade). */
+  * src/sink/kafka/producer.zig:430-502). Bad security config is rejected
+  * at parse time by `WireEndpoint.parse` (KafkaWireTlsSpec,
+  * KafkaWireSaslSpec). */
 class KafkaDeliverySpec extends AnyFunSuite {
   private lazy val spark = SparkTestBase.spark
 
@@ -88,34 +88,5 @@ class KafkaDeliverySpec extends AnyFunSuite {
       producer = Some(clean))
     try q2.processAllAvailable() finally q2.stop()
     assert(distinctByLsn == spark.read.parquet(onceMore).count())
-  }
-
-  test("bad security config fails at build time, never silently downgrades") {
-    val base = KafkaSinkConfig.producerOptions("broker:9092")
-    // valid overlay passes and is kafka.-prefixed
-    val ok = KafkaSinkConfig.withSecurity(base, Map(
-      "security.protocol" -> "SASL_SSL",
-      "sasl.mechanism" -> "SCRAM-SHA-512",
-      "ssl.truststore.location" -> "/etc/certs/ca.jks"))
-    assert(ok("kafka.security.protocol") == "SASL_SSL")
-    assert(ok("kafka.sasl.mechanism") == "SCRAM-SHA-512")
-    // unknown protocol: rejected (no silent plaintext fallback)
-    intercept[IllegalArgumentException] {
-      KafkaSinkConfig.withSecurity(base, Map("security.protocol" -> "SSL_MAYBE"))
-    }
-    // unknown SASL mechanism: rejected (reference's closed enum,
-    // config.zig:28)
-    intercept[IllegalArgumentException] {
-      KafkaSinkConfig.withSecurity(base, Map(
-        "security.protocol" -> "SASL_SSL", "sasl.mechanism" -> "GSSAPI"))
-    }
-    // blank value: rejected (disables the setting downstream)
-    intercept[IllegalArgumentException] {
-      KafkaSinkConfig.withSecurity(base, Map("ssl.truststore.location" -> ""))
-    }
-    // the REAL producer validates at construction — before a query starts
-    intercept[IllegalArgumentException] {
-      new KafkaFrameProducer("broker:9092", Map("security.protocol" -> "nope"))
-    }
   }
 }

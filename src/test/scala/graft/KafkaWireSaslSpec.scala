@@ -2,7 +2,6 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.sink.KafkaSinkConfig
 import graft.sink.kafka.{DeliveryFailedException, KafkaSasl, WireEndpoint,
   WireProducer}
 import graft.source.postgres.PgTls
@@ -137,57 +136,18 @@ class KafkaWireSaslSpec extends AnyFunSuite {
     assert(!ep.poolKey.toString.contains("s3cret"))
   }
 
-  // ---- config routing (KafkaSinkConfig.wireSasl / secureWireBootstrap) ----
+  // ---- the bootstrap string (WireEndpoint.parse) ----
 
-  test("wireSasl: SASL_* routes to a config; password resolves from env") {
-    val env = Map("KAFKA_PW" -> "s3cret")
-    val cfg = KafkaSinkConfig.wireSasl(Map(
-      "security.protocol" -> "SASL_SSL",
-      "sasl.mechanism" -> "SCRAM-SHA-256",
-      "sasl.username" -> "svc",
-      "sasl.password.env" -> "KAFKA_PW"), env.get)
-    assert(cfg.contains(KafkaSasl.Config("SCRAM-SHA-256", "svc", "s3cret")))
-    // SASL_SSL also derives a TLS config (the reference's tls×sasl axes)
-    val tls = KafkaSinkConfig.wireTls(Map(
-      "security.protocol" -> "SASL_SSL", "ssl.ca.location" -> "/dev/null",
-      "ssl.endpoint.identification.algorithm" -> "none"))
-    assert(tls.exists(_.mode == "verify-ca"))
-    assert(KafkaSinkConfig.wireTls(
-      Map("security.protocol" -> "SASL_PLAINTEXT")).isEmpty)
-  }
-
-  test("wireSasl: loud failures — unset env, missing fields, stray options") {
-    val base = Map("security.protocol" -> "SASL_PLAINTEXT",
-      "sasl.mechanism" -> "PLAIN", "sasl.username" -> "svc")
-    intercept[IllegalArgumentException] { // env var named but absent
-      KafkaSinkConfig.wireSasl(base + ("sasl.password.env" -> "NOPE"),
-        _ => None)
-    }
-    intercept[IllegalArgumentException] { // neither password form
-      KafkaSinkConfig.wireSasl(base, _ => None)
-    }
-    intercept[IllegalArgumentException] { // missing username
-      KafkaSinkConfig.wireSasl(Map("security.protocol" -> "SASL_PLAINTEXT",
-        "sasl.mechanism" -> "PLAIN", "sasl.password" -> "x"), _ => None)
-    }
-    intercept[IllegalArgumentException] { // credentials silently ignored
-      KafkaSinkConfig.wireSasl(Map("security.protocol" -> "PLAINTEXT",
-        "sasl.mechanism" -> "PLAIN"), _ => None)
-    }
-  }
-
-  test("secureWireBootstrap carries the env NAME; parse resolves and pools by principal") {
+  test("SASL bootstrap carries the env NAME; parse resolves and pools by principal") {
     val fakeEnv: String => Option[String] =
       n => if (n == "GRAFT_TEST_SASL_PW") Some("oddpw") else None
-    val boot = KafkaSinkConfig.secureWireBootstrap("wire://h:9092", Map(
-      "security.protocol" -> "SASL_PLAINTEXT",
-      "sasl.mechanism" -> "SCRAM-SHA-256",
-      "sasl.username" -> "u=2,",
-      "sasl.password.env" -> "GRAFT_TEST_SASL_PW"), fakeEnv)
+    // the user 'u=2,' percent-encoded, as a URL query value is written
+    val boot = "wire://h:9092?saslmech=SCRAM-SHA-256&sasluser=u%3D2%2C" +
+      "&saslpassenv=GRAFT_TEST_SASL_PW"
     assert(!boot.contains("oddpw"),
       s"the secret leaked into the bootstrap string: $boot")
-    assert(boot.startsWith("wire://h:9092?"))
     val ep = WireEndpoint.parse(boot, fakeEnv)
+    assert(ep.host == "h" && ep.port == 9092 && ep.tls.isEmpty)
     assert(ep.sasl.contains(KafkaSasl.Config("SCRAM-SHA-256", "u=2,",
       "oddpw")))
     // the pool key carries the STRUCTURED principal identity — never a
@@ -195,21 +155,29 @@ class KafkaWireSaslSpec extends AnyFunSuite {
     assert(ep.poolKey._4.contains(("SCRAM-SHA-256", "u=2,")))
     assert(!ep.poolKey.toString.contains("oddpw"),
       "the secret leaked into the pool key")
-    // the direct-password form cannot ride the string path
-    intercept[IllegalArgumentException] {
-      KafkaSinkConfig.secureWireBootstrap("wire://h:9092", Map(
-        "security.protocol" -> "SASL_PLAINTEXT",
-        "sasl.mechanism" -> "PLAIN", "sasl.username" -> "svc",
-        "sasl.password" -> "direct"), fakeEnv)
+  }
+
+  test("parse: loud failures — unset env, missing fields, stray params") {
+    val env: String => Option[String] =
+      n => if (n == "PW") Some("s3cret") else None
+    def rejects(boot: String, why: String): Unit = {
+      val e = intercept[IllegalArgumentException](WireEndpoint.parse(boot, env))
+      assert(e.getMessage.contains(why), s"$boot: ${e.getMessage}")
     }
-    // re-securing an already-secured bootstrap fails loudly instead of
-    // yielding a two-'?' endpoint (r16 advice)
-    intercept[IllegalArgumentException] {
-      KafkaSinkConfig.secureWireBootstrap(boot, Map(
-        "security.protocol" -> "SASL_PLAINTEXT",
-        "sasl.mechanism" -> "PLAIN", "sasl.username" -> "svc",
-        "sasl.password.env" -> "GRAFT_TEST_SASL_PW"), fakeEnv)
-    }
+    rejects("wire://h:1?saslmech=PLAIN&saslpassenv=PW", "without sasluser")
+    rejects("wire://h:1?saslmech=PLAIN&sasluser=svc", "without saslpassenv")
+    rejects("wire://h:1?saslmech=PLAIN&sasluser=svc&saslpassenv=NOPE",
+      "'NOPE' but it is not set")
+    rejects("wire://h:1?sasluser=svc&saslpassenv=PW", "without saslmech")
+    rejects("wire://h:1?saslpassenv=PW", "without saslmech")
+    // the secret itself has no param: only its env NAME rides the string
+    rejects("wire://h:1?saslmech=PLAIN&sasluser=svc&saslpass=direct",
+      "unknown wire bootstrap params saslpass")
+    rejects("wire://h:1?saslmech=GSSAPI&sasluser=svc&saslpassenv=PW",
+      "unknown SASL mechanism")
+    // a second query string fails loudly, never half-parses (r16 advice)
+    rejects("wire://h:1?saslmech=PLAIN&sasluser=svc&saslpassenv=PW" +
+      "?saslmech=PLAIN", "'PW?saslmech=PLAIN' but it is not set")
   }
 
   test("pool keys cannot collide across principals via crafted values") {
@@ -276,20 +244,22 @@ class KafkaWireSaslSpec extends AnyFunSuite {
     assert(e3 == KafkaSasl.ErrAuthenticationFailed && m3.contains("base64"))
   }
 
-  test("secureWireBootstrap composes SASL_SSL: wire+tls scheme plus sasl params") {
+  test("a wire+tls bootstrap with sasl params composes SASL_SSL") {
     val ca = java.nio.file.Files.createTempFile("graft-ca", ".crt")
     try {
-      val boot = KafkaSinkConfig.secureWireBootstrap("wire://h:9092", Map(
-        "security.protocol" -> "SASL_SSL",
-        "ssl.ca.location" -> ca.toString,
-        "sasl.mechanism" -> "PLAIN",
-        "sasl.username" -> "svc",
-        "sasl.password.env" -> "GRAFT_TEST_SASL_PW"), _ => Some("pw"))
-      assert(boot.startsWith("wire+tls://h:9092?"))
-      assert(boot.contains("verify=full") && boot.contains("saslmech=PLAIN"))
-      val ep = WireEndpoint.parse(boot, _ => Some("pw"))
-      assert(ep.tls.exists(_.mode == "verify-full"))
-      assert(ep.sasl.exists(_.mechanism == "PLAIN"))
+      val caParam = java.net.URLEncoder.encode(ca.toString, "UTF-8")
+      val sasl = "saslmech=PLAIN&sasluser=svc&saslpassenv=GRAFT_TEST_SASL_PW"
+      val ep = WireEndpoint.parse(s"wire+tls://h:9092?ca=$caParam&$sasl",
+        _ => Some("pw"))
+      assert(ep.tls.contains(PgTls.SslConfig("verify-full", Some(ca.toString))))
+      assert(ep.sasl.contains(KafkaSasl.Config("PLAIN", "svc", "pw")))
+      val caOnly = WireEndpoint.parse(
+        s"wire+tls://h:9092?ca=$caParam&verify=ca&$sasl", _ => Some("pw"))
+      assert(caOnly.tls.exists(_.mode == "verify-ca"))
+      assert(caOnly.sasl.exists(_.mechanism == "PLAIN"))
+      // the same params over plaintext are SASL_PLAINTEXT: no TLS
+      assert(WireEndpoint.parse(s"wire://h:9092?$sasl", _ => Some("pw"))
+        .tls.isEmpty)
     } finally java.nio.file.Files.deleteIfExists(ca)
   }
 }

@@ -87,7 +87,7 @@ class KafkaWireTlsSpec extends AnyFunSuite {
     } finally broker.close()
   }
 
-  test("wire+tls bootstrap and the SSL security enum drive the same config") {
+  test("a wire+tls bootstrap parses to its TLS config or fails at parse time") {
     val creds = TlsTestCerts.makeServer()
     val caPath = creds.certPath.toString
     // bootstrap-string form
@@ -103,29 +103,19 @@ class KafkaWireTlsSpec extends AnyFunSuite {
     intercept[IllegalArgumentException](WireEndpoint.parse("wire+tls://h:1"))
     intercept[IllegalArgumentException](
       WireEndpoint.parse("wire+tls://h:1?verify=sideways"))
-    // security-enum form: security.protocol=SSL now CONSTRUCTS the wire
-    // TLS config (r14 VERDICT #5 — the enum stops being validate-only)
-    import graft.sink.KafkaSinkConfig
-    assert(KafkaSinkConfig.wireTls(Map.empty).isEmpty)
-    assert(KafkaSinkConfig.wireTls(Map(
-      "security.protocol" -> "SSL", "ssl.ca.location" -> caPath))
-      .contains(PgTls.SslConfig("verify-full", Some(caPath))))
-    assert(KafkaSinkConfig.wireTls(Map(
-      "security.protocol" -> "SSL", "ssl.ca.location" -> caPath,
-      "ssl.endpoint.identification.algorithm" -> "none"))
-      .get.mode == "verify-ca")
-    intercept[IllegalArgumentException](
-      KafkaSinkConfig.wireTls(Map("security.protocol" -> "SASL_SSL")))
-    // SSL without a CA and without the explicit verification opt-out must
-    // fail loudly (SslConfig's constructor), never encrypt-and-trust-all
-    intercept[IllegalArgumentException](
-      KafkaSinkConfig.wireTls(Map("security.protocol" -> "SSL")))
-    val up = KafkaSinkConfig.secureWireBootstrap("wire://b:2", Map(
-      "security.protocol" -> "SSL", "ssl.ca.location" -> caPath))
-    assert(WireEndpoint.parse(up) ==
-      WireEndpoint.Ep("b", 2, Some(PgTls.SslConfig("verify-full", Some(caPath)))))
-    assert(KafkaSinkConfig.secureWireBootstrap("wire://b:2", Map.empty) ==
-      "wire://b:2")
+    // a CA path holding '&' (legal in a filename) rides percent-encoded
+    // and decodes at parse time
+    val amp = java.nio.file.Files.createTempFile("graft-ca&", ".crt")
+    try {
+      val enc = java.net.URLEncoder.encode(amp.toString, "UTF-8")
+      assert(WireEndpoint.parse(s"wire+tls://b:2?ca=$enc") ==
+        WireEndpoint.Ep("b", 2, Some(PgTls.SslConfig("verify-full", Some(amp.toString)))))
+    } finally java.nio.file.Files.deleteIfExists(amp)
+    // TLS params on a plaintext bootstrap are refused, not ignored
+    intercept[IllegalArgumentException](WireEndpoint.parse(s"wire://b:2?ca=$caPath"))
+    // a bootstrap of any other scheme names the accepted forms
+    val e = intercept[IllegalArgumentException](WireEndpoint.parse("b:2"))
+    assert(e.getMessage.contains(WireEndpoint.Forms), e.getMessage)
   }
 
   test("the frames sink's wire mode carries TLS through the DSv2 path") {

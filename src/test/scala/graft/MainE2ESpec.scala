@@ -199,5 +199,21 @@ class MainE2ESpec extends AnyFunSuite {
       env = Map.empty, timeoutS = 60)
     assert(rc != 0, s"must refuse to start; output:\n$out")
     assert(out.contains("refusing to start"), s"wrong failure in:\n$out")
+
+    // a sink bootstrap that is not wire:// or wire+tls:// is refused at
+    // startup too, before any connection: the source URI points at a
+    // closed port, so a child that got as far as the bootstrap would say so
+    val closedPort = { val s = new java.net.ServerSocket(0); try s.getLocalPort finally s.close() }
+    val (rc2, out2) = runMain(
+      Seq(writeConfig(base), s"$base/wal", s"$base/ckpt", s"$base/out"),
+      env = Map(
+        "GRAFT_PG_E2E" -> s"postgres://graft_user@127.0.0.1:$closedPort/appdb",
+        "GRAFT_KAFKA_BOOTSTRAP" -> "127.0.0.1:9092"),
+      timeoutS = 60)
+    assert(rc2 != 0, s"must refuse a non-wire bootstrap; output:\n$out2")
+    assert(out2.contains("wire://host:port") && out2.contains("wire+tls://host:port"),
+      s"the failure must name the accepted forms:\n$out2")
+    assert(!out2.contains("[graft] bootstrap attempt"),
+      s"refused only after a connection attempt:\n$out2")
   }
 }

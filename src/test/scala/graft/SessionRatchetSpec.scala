@@ -9,7 +9,9 @@ import scala.jdk.CollectionConverters._
   * inventory below, and the shipped entry points are the mains listed
   * below. A second builder, a new knob or a new main fails here; a deleted
   * knob or main must leave its list too. Timing harnesses belong in
-  * `perfbench/`, not in the shipped tree.
+  * `perfbench/`, not in the shipped tree. Kafka and PostgreSQL are reached
+  * only through the engine's own wire clients: the build ships no Kafka
+  * connector and no JDBC driver, so code calling either could never run.
   */
 class SessionRatchetSpec extends AnyFunSuite {
   private val mainRoot = Paths.get("src/main")
@@ -52,6 +54,16 @@ class SessionRatchetSpec extends AnyFunSuite {
     }.toSet
     assert(read -- knobs == Set.empty, "knobs missing from the inventory")
     assert(knobs -- read == Set.empty, "inventory knobs no longer read")
+  }
+
+  test("no JDBC or stock Kafka connector call appears under src/main") {
+    val banned = Seq("DriverManager", "java.sql.Connection", "format(\"kafka\")",
+      "format(\"jdbc\")", "read.jdbc")
+    val found = for {
+      (p, code) <- sources
+      b <- banned if code.contains(b)
+    } yield s"${p.getFileName}: $b"
+    assert(found.isEmpty, s"calls into jars this build does not ship: $found")
   }
 
   test("the objects defining a main are the shipped entry points") {

@@ -1,5 +1,7 @@
 package graft
 
+import graft.config.StreamDef
+import graft.metrics.GraftMetrics
 import graft.model.{ChangeEvent, Meta, Op}
 import graft.operators.Routing
 import graft.sink.FrameProducer
@@ -8,6 +10,7 @@ import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.{Files, Paths}
 import java.util.concurrent.atomic.AtomicLong
+import scala.jdk.CollectionConverters._
 
 /** Snapshot READ events must reach the SAME destination as streamed changes:
   * through the FrameProducer in producer mode, and NEVER into the streaming
@@ -55,5 +58,36 @@ class SnapshotDeliverySpec extends AnyFunSuite {
     assert(produced.get() == 9)
     assert(!Files.exists(Paths.get(d.snapshotOutDir)),
       "producer mode must not write parquet")
+  }
+
+  test("delivered snapshot READs count in /metrics, per stream as op=read") {
+    val routed = new AtomicLong(0)
+    val p = new FrameProducer {
+      override def produce(shaped: DataFrame): Unit =
+        routed.addAndGet(shaped.count())
+    }
+    // two streams read public.signup; none reads public.view
+    val streams = Routing.fixtureStreams :+
+      StreamDef("s_audit", "public.signup", Seq("read"), "cdc.audit")
+    val metrics = new GraftMetrics
+    val d = new SnapshotDelivery(spark, streams, Some(p),
+      Files.createTempDirectory("graft-snapdel3").toString + "/out",
+      chunkRows = 10, metrics = Some(metrics))
+    (1L to 25L).foreach(i => d.emit(readEvent(i)))
+    d.emit(ChangeEvent(Op.Read, """{"id":1}""",
+      Meta("postgres", "public.view", 1700000000L, ChangeEvent.lsnText(0x500L))))
+    d.flush()
+    assert(d.deliveredCount == 26)
+    assert(metrics.snapshotEvents.get() == d.deliveredCount)
+    val tallies = metrics.streamOpCounts.asScala.map { case (k, v) => k -> v.get() }
+    assert(tallies == Map(("s_signup", "read") -> 25L, ("s_audit", "read") -> 25L))
+    // the tallies count exactly the routed frames the sink received
+    assert(tallies.values.sum == routed.get())
+    // the streaming query's counter stays streamed changes only
+    assert(metrics.eventsProcessed.get() == 0)
+    val text = metrics.render
+    assert(text.contains("graft_snapshot_events_total 26\n"), text)
+    assert(text.contains("graft_stream_events_total{stream=\"s_audit\",op=\"read\"} 25\n"), text)
+    assert(text.contains("graft_events_processed_total 0\n"), text)
   }
 }

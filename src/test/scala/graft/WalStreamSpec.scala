@@ -222,24 +222,4 @@ class WalStreamSpec extends AnyFunSuite {
     // still planning-correct after the prune: an empty range plans empty
     assert(src.planInputPartitions(end, end).isEmpty)
   }
-
-  test("kafka sink config carries the reference's delivery semantics") {
-    val opts = graft.sink.KafkaSinkConfig.producerOptions("broker:9092")
-    assert(opts("kafka.enable.idempotence") == "true")
-    assert(opts("kafka.acks") == "all")
-    assert(opts("kafka.linger.ms") == "50")
-    assert(opts("kafka.batch.size") == (256 * 1024).toString)
-    val sec = graft.sink.KafkaSinkConfig.withSecurity(opts,
-      Map("security.protocol" -> "SASL_SSL"))
-    assert(sec("kafka.security.protocol") == "SASL_SSL")
-  }
-
-  test("preflight check SQL matches the validator contract") {
-    import graft.metrics.PreflightChecks._
-    assert(serverVersion.contains("server_version_num"))
-    assert(walLevel.contains("wal_level"))
-    assert(tableExists("public.users").contains("to_regclass"))
-    assert(columnExists("public.users", "id").contains("pg_attribute"))
-    assert(replicaIdentityFull("public.users").contains("relreplident"))
-  }
 }
