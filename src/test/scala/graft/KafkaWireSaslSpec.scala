@@ -138,6 +138,18 @@ class KafkaWireSaslSpec extends AnyFunSuite {
 
   // ---- the bootstrap string (WireEndpoint.parse) ----
 
+  test("parse routes sasl params to a config; the password resolves from env") {
+    val env = Map("KAFKA_PW" -> "s3cret")
+    KafkaSasl.Mechanisms.foreach { mech =>
+      val ep = WireEndpoint.parse(s"wire://h:9092?saslmech=$mech" +
+        "&sasluser=svc&saslpassenv=KAFKA_PW", env.get)
+      assert(ep.sasl.contains(KafkaSasl.Config(mech, "svc", "s3cret")), mech)
+      assert(ep.tls.isEmpty, s"$mech over wire:// is SASL_PLAINTEXT")
+    }
+    // no sasl params: no SASL config, whatever the env holds
+    assert(WireEndpoint.parse("wire://h:9092", env.get).sasl.isEmpty)
+  }
+
   test("SASL bootstrap carries the env NAME; parse resolves and pools by principal") {
     val fakeEnv: String => Option[String] =
       n => if (n == "GRAFT_TEST_SASL_PW") Some("oddpw") else None
